@@ -61,7 +61,8 @@ _R13_HEAD = (
      "q330",)
     # (b) the r13 changed-execution queries: the BPE family now trains
     # per call (the retired _BPE_MEMO/_Q215_MEMO result caches) and
-    # q310's melt key went type-agnostic (string union key, r12 ADVICE)
+    # q310's melt kept its narrow long key, now behind a TypeError
+    # guard (a string union key measured slower)
     + ("q201", "q206", "q215", "q217", "q310",)
     # (c) staleness fill to exactly 50: the r4 leftover (q89-q95,
     # oldest evidence in the ledger) then the head of the r5 cohort

@@ -109,9 +109,12 @@ def main() -> None:
     # a compact totals record (head-limited capture insurance), the
     # full one-line record (the contract), then the per-query dict
     # SPLIT across self-describing <1 KB compact chunk records — every
-    # line individually parseable, so a line-clipping or tail-limited
-    # capture still yields per-query timings — and a final compact
-    # totals record (the tail-capture parse proven in rounds 7-12).
+    # line individually parseable, so a line-clipping capture still
+    # yields the per-query timings of every chunk it keeps — and a
+    # final compact totals record (the tail-capture parse proven in
+    # rounds 7-12).  A ~2 KB tail capture keeps only that totals record
+    # and about one chunk: the ~13 KB of chunks for ~350 queries do not
+    # fit, so most per-query timings are lost in that mode.
     compact = json.dumps(
         {
             "metric": record["metric"],

@@ -18,7 +18,7 @@ planning step scales with the data like any other query:
   |files| rows, never data rows.
 - :func:`compaction_bins` — greedy contiguous bin-packing of small
   files into target-size compaction jobs via the distributed prefix
-  sum (:func:`~..operators.windows.scalable_cumsum`), so the planner
+  sum (:func:`~..operators.windows.scalable_prefix_sums`), so the planner
   itself never funnels through a single task even for a million-file
   table listing.
 
@@ -108,16 +108,16 @@ def compaction_bins(
     target)``, the streaming first-fit rule every table-maintenance
     service (OPTIMIZE/compaction) applies per partition.
 
-    The prefix sum is :func:`~..operators.windows.scalable_cumsum` —
+    The prefix sum is :func:`~..operators.windows.scalable_prefix_sums` —
     range-repartition + per-partition local scan + broadcast offsets —
     so planning a million-file listing never funnels through one task.
     Contiguity in ``order_cols`` is deliberate: compaction must
     preserve the table's clustering, so bins may only merge NEIGHBORING
     files.  Input is one row per file (metadata-sized); output adds
     ``cum_bytes`` and ``bin_col``."""
-    from .windows import scalable_cumsum
+    from .windows import scalable_prefix_sums
 
-    out = scalable_cumsum(files, order_cols, size_col, out_col="cum_bytes")
+    out = scalable_prefix_sums(files, order_cols, {"cum_bytes": size_col})
     return out.withColumn(
         bin_col,
         F.floor(

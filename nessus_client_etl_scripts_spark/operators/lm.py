@@ -219,6 +219,19 @@ def top_bigram(df: DataFrame, text_col: str = "text",
     return row[0]["bigram"]
 
 
+def _greedy_merge(s: Column, pair: str, marker: str) -> tuple[Column, Column]:
+    """BPE's non-overlapping greedy left-to-right merge of ``pair`` in
+    the whitespace-tokenized string ``s``, as two literal replaces:
+    double every separator (and pad both ends) so each token owns its
+    boundary spaces, then replace " a  b " → " a~b " — string replace
+    resumes AFTER each match, which is exactly the greedy scan.
+    Returns ``(doubled, merged)``, both in the doubled form; ``merged``
+    is one char shorter per merge."""
+    a, b = pair.split(" ")
+    doubled = F.concat(F.lit(" "), F.replace(s, F.lit(" "), F.lit("  ")), F.lit(" "))
+    return doubled, F.replace(doubled, F.lit(f" {a}  {b} "), F.lit(f" {a}{marker}{b} "))
+
+
 def bpe_merge_step(
     df: DataFrame,
     pair: str,
@@ -245,27 +258,16 @@ def bpe_merge_step(
     against the pair itself; corpus-wide absence is the caller's
     contract, trivially true for whitespace-tokenized lowercase
     corpora and a '~' marker)."""
-    a, b = pair.split(" ")
     assert marker not in pair
     staged = df.select(
         F.col(id_col).alias("doc_id"),
         normalize_text(text_col).alias("norm"),
     )
-    s2 = F.concat(
-        F.lit(" "), F.regexp_replace(F.col("norm"), " ", "  "), F.lit(" ")
-    )
-    target = f" {a}  {b} "
-    repl = f" {a}{marker}{b} "
+    doubled, merged = _greedy_merge(F.col("norm"), pair, marker)
     exp = staged.select(
         "doc_id",
         F.size(tokens(F.col("norm"))).alias("n_tokens_before"),
-        s2.alias("_s2"),
-    ).select(
-        "doc_id",
-        "n_tokens_before",
-        (
-            F.length("_s2") - F.length(F.replace(F.col("_s2"), F.lit(target), F.lit(repl)))
-        ).cast("long").alias("n_merges"),
+        (F.length(doubled) - F.length(merged)).cast("long").alias("n_merges"),
     )
     return exp.select(
         "doc_id",
@@ -352,18 +354,8 @@ def bpe_train(
         meta.append((pair, -int(stats["w"]["nc"])))
         # later-round pairs legitimately contain the marker (merged
         # units are single tokens); only the RAW corpus must lack it
-        a, b = pair.split(" ")
-        s2 = F.concat(
-            F.lit(" "),
-            F.replace(F.col("s"), F.lit(" "), F.lit("  ")),
-            F.lit(" "),
-        )
-        merged = F.replace(
-            s2, F.lit(f" {a}  {b} "), F.lit(f" {a}{marker}{b} ")
-        )
         state = state.select(
-            "doc_id",
-            F.trim(F.replace(merged, F.lit("  "), F.lit(" "))).alias("s"),
+            "doc_id", merge_chain(F.col("s"), [pair], marker).alias("s")
         ).transform(_pin_lazy)
     # one final scan closes the ledger: tokens after the last merge
     tok.append(
@@ -601,21 +593,8 @@ def merge_chain(norm: Column, merges: list[str], marker: str = "~") -> Column:
     accounting, vocab extraction) composes over."""
     enc = norm
     for pair in merges:
-        a, b = pair.split(" ")
-        s2 = F.concat(
-            F.lit(" "),
-            F.replace(enc, F.lit(" "), F.lit("  ")),
-            F.lit(" "),
-        )
-        enc = F.trim(
-            F.replace(
-                F.replace(
-                    s2, F.lit(f" {a}  {b} "), F.lit(f" {a}{marker}{b} ")
-                ),
-                F.lit("  "),
-                F.lit(" "),
-            )
-        )
+        _, merged = _greedy_merge(enc, pair, marker)
+        enc = F.trim(F.replace(merged, F.lit("  "), F.lit(" ")))
     return enc
 
 

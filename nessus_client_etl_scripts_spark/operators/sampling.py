@@ -11,9 +11,9 @@ the same md5-truncation primitive as the dedup/sketch family, so every
 assignment is bit-identical in any engine that has md5.
 
 Scale shape: split assignment is row-local column algebra (zero
-shuffle, survives any partitioning); per-group sampling reuses
-``grouped_row_number`` so a handful of group values never funnels the
-table into a handful of tasks.
+shuffle, survives any partitioning); per-group sampling reuses the
+grouped ``scalable_prefix_sums`` row number so a handful of group
+values never funnels the table into a handful of tasks.
 """
 
 from __future__ import annotations
@@ -99,17 +99,18 @@ def group_sample(
 ) -> DataFrame:
     """Deterministic uniform sample of ``k`` rows per group: rank rows
     by salted content hash inside each group and keep the first ``k``.
-    Uses :func:`grouped_row_number` so a low-cardinality ``group_col``
+    Uses the grouped :func:`~.windows.scalable_prefix_sums` row number
+    so a low-cardinality ``group_col``
     (the common case — a handful of sources/languages) still spreads
     the ranking across all cores instead of one task per group, and no
     tie-group join runs (the 48-bit salted keys are unique with
     ``key_col`` as the final tiebreak, so row_number IS the rank —
     positions are all a top-k cut needs)."""
-    from .windows import grouped_row_number
+    from .windows import scalable_prefix_sums
 
     hashed = df.withColumn("_skey", _u48(F.col(key_col), salt))
-    ranked = grouped_row_number(
-        hashed, group_col, ("_skey", key_col), out_col="rank"
+    ranked = scalable_prefix_sums(
+        hashed, ("_skey", key_col), {"rank": F.lit(1)}, part_col=group_col
     )
     return ranked.filter(F.col("rank") <= k).drop("_skey")
 
@@ -262,13 +263,13 @@ def weighted_systematic_sample(
     throughout.
 
     The cumulative sum runs through the distributed prefix-sum
-    (windows.scalable_cumsum), so there is no single-task global
+    (windows.scalable_prefix_sums), so there is no single-task global
     window; everything else is row-local. ``n_hits`` counts the grid
     points inside the interval (a row heavier than ``stride`` is
     sampled multiply — the standard PPS-systematic semantics)."""
-    from .windows import scalable_cumsum
+    from .windows import scalable_prefix_sums
 
-    c = scalable_cumsum(df, order_cols, weight_col, out_col="cum_w")
+    c = scalable_prefix_sums(df, order_cols, {"cum_w": weight_col})
     prev = F.col("cum_w") - F.col(weight_col)
     n_hits = (
         F.floor(F.col("cum_w") / F.lit(stride))
@@ -303,7 +304,7 @@ def stratified_exact_split(
     (same partitioning, Catalyst reuses the exchange). Strata are
     (lang, source)-grained — thousands of groups, so plain windows
     distribute fine; a lower-cardinality stratification should swap in
-    grouped_row_number (see group_sample).
+    the grouped scalable_prefix_sums row number (see group_sample).
     """
     from pyspark.sql import Window
 

@@ -426,43 +426,6 @@ def _kmeans_py(
     return cents
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd k-means → (centroid_id, centroid array<double>) DataFrame
-    (see _kmeans_py for the iteration design)."""
-    cents = _kmeans_py(corpus, n_centroids, iters, id_col, vec_col)
-    return corpus.sparkSession.createDataFrame(
-        list(enumerate(cents)), "centroid_id int, centroid array<double>"
-    )
-
-
-def assign_to_centroids(
-    vecs: DataFrame,
-    centroids: DataFrame,
-    vec_attr: str = "v",
-    id_attr: str = "_vid",
-    nprobe: int = 1,
-) -> DataFrame:
-    """(id, centroid_id) — the nprobe nearest centroids per vector.
-
-    The centroid table is collected (k×dim doubles) and closed over by
-    the vectorized probe: no join, no shuffle, ties broken on the lower
-    centroid_id."""
-    cents_rows = sorted(
-        centroids.collect(), key=lambda r: r["centroid_id"]
-    )
-    cents = [list(r["centroid"]) for r in cents_rows]
-    return vecs.select(
-        id_attr,
-        F.explode(_probe_udf(cents, nprobe)(vec_attr)).alias("centroid_id"),
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,

@@ -6,6 +6,11 @@ subqueries (get_folder_stats.sql:12-57, get_scan_stats.sql:14-16).
 In set semantics that's exactly a ranking window; one Catalyst window
 exec replaces the loop + temp table, and at scale it's a single shuffle
 on the partition key (no per-group round trips).
+
+Ordered analytics over entity-scale frames — running sums, row
+numbers, running maxima, ranks, ntiles, medians — must not funnel
+through a partition-less or low-cardinality window; they all ride one
+range-exchange scan kernel, :func:`_range_scan`.
 """
 
 from __future__ import annotations
@@ -14,6 +19,9 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import WindowSpec
+
 from ..pins import pin_lazy as _pin_lazy
 
 
@@ -71,6 +79,100 @@ def latest_per_group(
     )
 
 
+def _range_scan(
+    df: DataFrame,
+    part_col: str | None,
+    order_cols: Sequence[str],
+    sums: dict[str, Column | str] | None = None,
+    maxes: dict[str, Column | str] | None = None,
+    derive: dict[str, Column] | None = None,
+) -> tuple[DataFrame, WindowSpec]:
+    """The two-phase scan every operator below is built on — a window
+    over ``(part_col, *order_cols)`` without the single-task trap of
+    ``Window.orderBy(...)`` (no partition key) or of a low-cardinality
+    ``Window.partitionBy(part)`` (the whole table through |parts|
+    tasks).
+
+    1. ``repartitionByRange(part, *order)`` gives a total order across
+       ``spark.sql.shuffle.partitions`` partitions, each row tagged
+       with its partition id ``_pid``.
+    2. One small stats job — per ``(part, _pid)``, the SUM of each
+       ``sums`` expression and the MAX of each ``maxes`` expression
+       (≤ |parts| + P rows, the zipWithIndex / spark.ml KMeans
+       driver-side small-state pattern) — is folded on the driver, in
+       ``_pid`` order within each group, into broadcast offsets:
+       ``_off_<name>`` is the sum (or max) over the group's rows in
+       EARLIER partitions (0 or NULL in the group's first partition)
+       and ``_tot_<name>`` a sum over the whole group.
+
+    Returns the staged rows joined with their offsets, plus the local
+    window ``partitionBy(part, _pid).orderBy(*order)``: a per-partition
+    scan over it plus ``_off_<name>`` is the global scan.
+
+    ``derive`` adds columns to the staged frame, after the exchange
+    (sum and max expressions may read them): an expensive column — a
+    salted md5, a token array — is then computed once per consuming
+    action, on every staged partition in parallel, instead of on both
+    pre-exchange passes (range-bounds sampling and the exchange's map
+    side), which run at the source's split count and ship it through
+    the exchange.
+
+    Correctness rule: the offsets are keyed by PHYSICAL partition id,
+    so the frame the final join reads must be the same materialization
+    the stats were collected from — a non-deterministic upstream
+    (changed file listing order, a recomputed shuffle) could otherwise
+    reassign rows between the two jobs and silently corrupt every
+    offset.  The staged frame is therefore pinned (``pin_lazy``); the
+    stats collect is its first action, so it both materializes the
+    pin and reads the stats in ONE job."""
+    sums, maxes = sums or {}, maxes or {}
+    spark = df.sparkSession
+    try:
+        num = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):  # 'auto' under AQE-managed shuffles
+        num = spark.sparkContext.defaultParallelism
+    keys = [part_col] if part_col else []
+    staged = (
+        df.repartitionByRange(num, *[F.col(c) for c in (*keys, *order_cols)])
+        .withColumn("_pid", F.spark_partition_id())
+        .transform(_pin_lazy)
+    )
+    for name, expr in (derive or {}).items():
+        staged = staged.withColumn(name, expr)
+    stats = staged.groupBy(*keys, "_pid").agg(
+        *[F.sum(e).alias(n) for n, e in sums.items()],
+        *[F.max(e).alias(n) for n, e in maxes.items()],
+    )
+    groups: dict = {}
+    for r in stats.collect():
+        groups.setdefault(r[part_col] if part_col else None, []).append(r)
+    recs = []
+    for g, rows in groups.items():
+        rows.sort(key=lambda r: r["_pid"])
+        run, top, offs = dict.fromkeys(sums, 0), dict.fromkeys(maxes), []
+        for r in rows:
+            offs.append((r["_pid"], *run.values(), *top.values()))
+            for n in sums:
+                run[n] += r[n] or 0
+            for n in maxes:
+                if r[n] is not None and (top[n] is None or r[n] > top[n]):
+                    top[n] = r[n]
+        recs += [(*([g] if part_col else []), *o, *run.values()) for o in offs]
+    schema = T.StructType(
+        [stats.schema[c] for c in (*keys, "_pid")]
+        + [
+            T.StructField(f"_off_{n}", stats.schema[n].dataType)
+            for n in (*sums, *maxes)
+        ]
+        + [T.StructField(f"_tot_{n}", stats.schema[n].dataType) for n in sums]
+    )
+    offsets = spark.createDataFrame(recs, schema)
+    return (
+        staged.join(F.broadcast(offsets), [*keys, "_pid"]),
+        Window.partitionBy(*keys, "_pid").orderBy(*order_cols),
+    )
+
+
 def two_phase_rank(
     df: DataFrame,
     part_col: str,
@@ -79,119 +181,40 @@ def two_phase_rank(
     rank_col: str = "rank",
     pct_col: str = "pct_rank",
     gap_col: str = "gap_to_prev",
-    num_partitions: int | None = None,
-    grn_col: str | None = None,
 ) -> DataFrame:
-    """Exact rank / percent_rank / lag-gap per group WITHOUT a
-    low-cardinality window partition — the 100 TB-safe replacement for
-    ``Window.partitionBy(part).orderBy(val)`` when ``part`` has a
-    handful of distinct values (which funnels the whole table into
-    that many tasks).
-
-    Two phases, all shuffles fine-grained:
-
-    1. ``repartitionByRange(part, val, key)`` gives a total order
-       across partitions; a tiny per-(part, partition) stats pass
-       (count, max val) is collected (≤ P×|parts| rows — same
-       driver-side small-state pattern as zipWithIndex / spark.ml
-       KMeans) and turned into broadcast row-number OFFSETS and each
-       partition's predecessor value.
-    2. A window keyed by (part, partition_id) — P×|parts| groups, so
-       every core works — computes local row numbers and local lag;
-       global row_number = local + offset, rank = min global
-       row_number over the (part, val) tie group (fine-grained
-       groupBy + join), percent_rank = (rank-1)/(n-1), and the lag
-       gap falls back to the predecessor partition's max val for each
-       partition's first row.
-
-    The staged frame is ``localCheckpoint``ed BEFORE the stats job
-    (same pin as :func:`scalable_cumsum`): the offsets are keyed by
-    physical partition id, so the frame the final join reads must be
-    the SAME materialization the stats were collected from — a
-    non-deterministic upstream (changed file listing order, a
-    recomputed shuffle) could otherwise reassign rows between the two
-    jobs and silently corrupt every rank.
+    """Exact ``rank() / percent_rank() / lag()`` per group over
+    :func:`_range_scan` on ``(part; val, key)``: global row number =
+    local row number + the row-count offset, rank = min global row
+    number over the (part, val) tie group (fine-grained groupBy +
+    join), percent_rank = (rank-1)/(n-1), and the lag gap falls back
+    to the max ``val`` of the group's earlier partitions for each
+    partition's first row.
 
     Matches SQL ``rank()/percent_rank()/lag() OVER (PARTITION BY part
     ORDER BY val [, key])`` exactly, including percent_rank = 0 for
     single-row groups and a NULL gap for each group's first row.
-
-    ``grn_col`` (optional) additionally exposes the dense global
-    ``row_number() OVER (PARTITION BY part ORDER BY val, key)`` —
-    unlike ``rank_col`` it never duplicates or skips values under
-    ``val``-ties, so consumers that need contiguous positions (e.g.
-    the training-shuffle's data-loader shard contract) use it instead
-    of the rank.
-    """
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    num = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # eager=False: the stats collect right below is ALWAYS the first
-    # action on the staged frame, so it both materializes the local
-    # checkpoint (computing and caching every partition — a full
-    # hash-aggregate scan, never a partial take) and reads the stats in
-    # ONE job instead of a dedicated materialize job followed by a
-    # stats job. The pinning invariant is unchanged: offsets are
-    # collected from, and the final join reads, the same cached
-    # materialization.
-    staged = (
-        df.repartitionByRange(num, F.col(part_col), F.col(val_col), F.col(key_col))
-        .withColumn("_pid", F.spark_partition_id())
-        .transform(_pin_lazy)
+    Consumers that read POSITIONS rather than ranks use
+    :func:`scalable_prefix_sums` over ``F.lit(1)``, which skips the
+    tie-group join."""
+    t, w = _range_scan(
+        df, part_col, (val_col, key_col),
+        sums={"n": F.lit(1)}, maxes={"last": val_col},
     )
-
-    stats = (
-        staged.groupBy(part_col, "_pid")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.max(val_col).alias("last_val"))
-        .collect()
-    )
-    by_part: dict = {}
-    for r in stats:
-        by_part.setdefault(r[part_col], []).append(r)
-    recs, totals = [], {}
-    for p, rows in by_part.items():
-        rows.sort(key=lambda r: r["_pid"])
-        off, prev_last = 0, None
-        for r in rows:
-            recs.append((p, r["_pid"], off, prev_last))
-            off += r["cnt"]
-            prev_last = r["last_val"]
-        totals[p] = off
-    schema = T.StructType(
-        [
-            df.schema[part_col],
-            T.StructField("_pid", T.IntegerType()),
-            T.StructField("_off", T.LongType()),
-            T.StructField("_prev_last", df.schema[val_col].dataType),
-            T.StructField("_n", T.LongType()),
-        ]
-    )
-    offsets = spark.createDataFrame(
-        [(p, pid, off, prev, totals[p]) for (p, pid, off, prev) in recs], schema
-    )
-
-    w_local = Window.partitionBy(part_col, "_pid").orderBy(val_col, key_col)
-    t = (
-        staged.join(F.broadcast(offsets), [part_col, "_pid"])
-        .withColumn("_grn", F.row_number().over(w_local) + F.col("_off"))
-        .withColumn(
-            gap_col,
-            F.col(val_col)
-            - F.coalesce(F.lag(val_col).over(w_local), F.col("_prev_last")),
-        )
+    t = t.withColumn("_grn", F.row_number().over(w) + F.col("_off_n")).withColumn(
+        gap_col,
+        F.col(val_col) - F.coalesce(F.lag(val_col).over(w), F.col("_off_last")),
     )
     mins = t.groupBy(part_col, val_col).agg(F.min("_grn").alias(rank_col))
-    out = t.join(mins, [part_col, val_col]).withColumn(
-        pct_col,
-        F.when(F.col("_n") == 1, F.lit(0.0)).otherwise(
-            (F.col(rank_col) - 1).cast("double") / (F.col("_n") - 1)
-        ),
+    return (
+        t.join(mins, [part_col, val_col])
+        .withColumn(
+            pct_col,
+            F.when(F.col("_tot_n") == 1, F.lit(0.0)).otherwise(
+                (F.col(rank_col) - 1).cast("double") / (F.col("_tot_n") - 1)
+            ),
+        )
+        .select(*df.columns, rank_col, pct_col, gap_col)
     )
-    extra = [grn_col] if grn_col else []
-    if grn_col:
-        out = out.withColumnRenamed("_grn", grn_col)
-    return out.select(*df.columns, rank_col, pct_col, gap_col, *extra)
 
 
 def top_k_per_group(
@@ -213,95 +236,50 @@ def top_k_per_group(
     return out.drop(rank_col)
 
 
-def scalable_cumsum(
+def scalable_prefix_sums(
     df: DataFrame,
     order_cols: tuple[str, ...],
-    val_col: str,
-    out_col: str = "cumsum",
-    num_partitions: int | None = None,
-    total_col: str | None = None,
+    sums: dict[str, Column | str],
+    part_col: str | None = None,
+    totals: dict[str, str] | None = None,
+    derive: dict[str, Column] | None = None,
 ) -> DataFrame:
-    """Exact GLOBAL running sum over a total order — the distributed
-    prefix-sum (scan) primitive — without the single-task trap of
-    ``Window.orderBy(...)`` with no partition key (which funnels the
-    entire table through one task).
+    """Inclusive running sums over one total order — ``SUM(e) OVER
+    ([PARTITION BY part] ORDER BY order_cols ROWS UNBOUNDED
+    PRECEDING)`` for each ``name: e`` in ``sums`` — over ONE
+    :func:`_range_scan`, so every extra sum costs one long per
+    partition in the driver stats plus one window sum.
 
-    Same two-phase shape as :func:`two_phase_rank`:
-    ``repartitionByRange(order_cols)`` establishes a total order across
-    partitions; a tiny per-partition stats job (P rows) is collected
-    and prefix-summed on the driver into broadcast offsets; each
-    partition then computes its local running sum in parallel and adds
-    its offset. The staged frame is ``localCheckpoint``ed BEFORE the
-    stats job: the offsets are keyed by physical partition id, so the
-    frame the final join reads must be the SAME materialization the
-    stats were collected from — re-executing the exchange against a
-    non-deterministic upstream (changed file listing order, a
-    recomputed shuffle) could silently reassign rows to partitions and
-    corrupt the offsets.
+    The distributed prefix-sum primitive: a row number is the running
+    sum of ``F.lit(1)``, a cumulative weight the running sum of the
+    weight column, and a per-group row number the same with
+    ``part_col`` (its range exchange spreads each of a handful of
+    groups over many partitions, so it never funnels a group through
+    one task).  ROWS semantics: callers make ``order_cols`` a total
+    order (within each group) by appending a unique tiebreaker — the
+    q04 contract.  Offsets are exact for integer summands.
 
-    Matches SQL ``SUM(val) OVER (ORDER BY order_cols ROWS UNBOUNDED
-    PRECEDING)`` exactly for integer-typed ``val_col`` (float prefix
-    sums are order-defined anyway — prefer integer weights).
+    Each output column ``name`` holds the running sum.  ``derive``
+    columns are computed after the exchange (see :func:`_range_scan`)
+    and emitted after ``df``'s columns; summands may read them (q153
+    sums its salted-md5 sample indicator and filters on it, q267
+    carries token arrays it only needs after the ranking).
 
-    ``total_col`` (optional) attaches the GRAND TOTAL of ``val_col``
-    as a literal column: the driver's stats pass computes it anyway
-    (the final running offset), so callers that otherwise pay a
-    separate ``agg(sum(...))`` subtree — which re-runs the caller's
-    whole upstream in its own execution — read it for free. The value
-    is identical to ``SUM(val)`` over the frame by construction (it is
-    the sum of the same per-partition sums)."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        # the conf may be 'auto' under AQE-managed shuffles
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
+    ``totals`` maps a sum's name to an output column holding that
+    summand's total over the row's group (over the whole frame without
+    ``part_col``): the driver's stats fold ends on exactly these
+    values, so callers that would otherwise aggregate the same totals
+    in a separate subtree — re-running their whole upstream — read
+    them off the offsets broadcast for free (group sizes for
+    positional percentile picks, q185's n1/n2)."""
+    t, w = _range_scan(df, part_col, order_cols, sums=sums, derive=derive)
+    w = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    return t.select(
+        *df.columns,
+        *(derive or {}),
+        *[(F.sum(e).over(w) + F.col(f"_off_{n}")).alias(n) for n, e in sums.items()],
+        *[F.col(f"_tot_{n}").alias(out) for n, out in (totals or {}).items()],
     )
-
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.sum(val_col).alias("s")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["s"] or 0
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_off", T.LongType()),
-            ]
-        ),
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = (
-        staged.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.sum(val_col).over(w_local) + F.col("_off"))
-    )
-    extra = []
-    if total_col:
-        out = out.withColumn(
-            total_col, F.lit(int(off)).cast("long")
-        )
-        extra = [total_col]
-    return out.select(*df.columns, out_col, *extra)
 
 
 def scalable_running_max(
@@ -310,401 +288,22 @@ def scalable_running_max(
     order_cols: tuple[str, ...],
     val_col: str,
     out_col: str = "run_max",
-    strict_preceding: bool = True,
-    num_partitions: int | None = None,
 ) -> DataFrame:
-    """Per-group running MAX over a total order without a
-    low-cardinality window partition — the monoid-scan sibling of
-    :func:`scalable_cumsum` (max is associative, so the same
-    two-phase shape applies: per-partition local scan + broadcast
-    prefix-of-partition-maxima offsets).
-
-    ``Window.partitionBy(part).orderBy(...)`` funnels each group
-    through ONE task; when ``part_col`` has a handful of values (the
-    skyline's ~25 brands) that is the whole table through 25 tasks.
-    Here the range exchange on ``(part, *order_cols)`` spreads every
-    group across many partitions; the driver sees only the
-    |parts| × P partition-maxima matrix (the same bounded small-state
-    pattern as :func:`two_phase_rank`) and broadcasts, per
-    ``(part, _pid)``, the max over that group's PRECEDING partitions.
-
-    ``strict_preceding=True`` gives ``MAX(val) OVER (PARTITION BY part
-    ORDER BY order_cols ROWS BETWEEN UNBOUNDED PRECEDING AND 1
-    PRECEDING)`` — NULL for each group's first row; ``False`` includes
-    the current row. ROWS semantics requires the caller to make
-    ``order_cols`` a total order within each group (append a unique
-    tiebreaker — the same contract as q04's global nth).
-
-    The staged frame is ``localCheckpoint``ed BEFORE the stats
-    collect: offsets are keyed by physical partition id and must read
-    the same materialization (the two_phase_rank/scalable_cumsum
-    pinning rule)."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(
-            num, F.col(part_col), *[F.col(c) for c in order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-
-    stats = staged.groupBy(part_col, "_pid").agg(F.max(val_col).alias("m"))
-    by_part: dict = {}
-    for r in stats.collect():
-        by_part.setdefault(r[part_col], []).append(r)
-    recs = []
-    for p, rows in by_part.items():
-        rows.sort(key=lambda r: r["_pid"])
-        prev_max = None
-        for r in rows:
-            recs.append((p, r["_pid"], prev_max))
-            m = r["m"]
-            if m is not None and (prev_max is None or m > prev_max):
-                prev_max = m
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                df.schema[part_col],
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_prior_max", df.schema[val_col].dataType),
-            ]
-        ),
-    )
-
-    end = -1 if strict_preceding else Window.currentRow
-    w_local = (
-        Window.partitionBy(part_col, "_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, end)
-    )
-    # greatest() skips NULLs: local-scan max for the partition's head
-    # rows is NULL under strict_preceding, prior_max is NULL for each
-    # group's first partition — either alone carries the answer.
-    return (
-        staged.join(F.broadcast(offsets), [part_col, "_pid"])
-        .withColumn(
-            out_col, F.greatest(F.max(val_col).over(w_local), F.col("_prior_max"))
-        )
-        .select(*df.columns, out_col)
-    )
-
-
-def scalable_row_number(
-    df: DataFrame,
-    order_cols: tuple[str, ...],
-    out_col: str = "rn",
-    num_partitions: int | None = None,
-    total_col: str | None = None,
-    derive: dict[str, Column] | None = None,
-    total_out: dict | None = None,
-) -> DataFrame:
-    """Global ``row_number() OVER (ORDER BY order_cols)`` (1-based)
-    without a single-task global window — and without
-    :func:`two_phase_rank`'s tie-group ``groupBy + join``, which exists
-    only to compute RANK semantics (min row number per value tie) and
-    doubles the shuffle volume for callers that don't need it.  When
-    the caller's order is already a total order (append a unique
-    tiebreaker — the q04 contract), the row number is all that's
-    needed: file chunking (q119), training-shuffle positions,
-    pagination.
-
-    One range exchange + per-partition local window + broadcast count
-    offsets; the staged frame is ``localCheckpoint``ed before the
-    stats collect (the two_phase_rank/scalable_cumsum pinning rule:
-    offsets are keyed by physical partition id and must read the same
-    materialization).
-
-    ``total_col`` attaches the total row count as a literal column
-    (the driver stats pass computes it anyway — the scalable_cumsum
-    total rule).  ``derive`` maps extra column names to expressions
-    evaluated ON THE STAGED FRAME, after the exchange (the
-    scalable_prefix_sums derive rule): a heavy payload column (q267's
-    token arrays) would otherwise be computed on BOTH pre-exchange
-    passes (range-bounds sampling + the exchange map side) and carried
-    through the shuffle; deriving it post-stage computes it once per
-    consuming action and keeps the exchange metadata-narrow.  Derived
-    expressions must not reference the range order (they are appended
-    after ordering is fixed).  ``total_out`` (optional dict) receives
-    the same total as a PYTHON int under key ``"n"`` — for callers
-    that need the value in expressions over OTHER frames, where a
-    column attached to this frame is unreachable without a join."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    if derive:
-        for name, expr in derive.items():
-            staged = staged.withColumn(name, expr)
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["c"]
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_off", T.LongType()),
-            ]
-        ),
-    )
-    w_local = Window.partitionBy("_pid").orderBy(*order_cols)
-    out = (
-        staged.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.row_number().over(w_local) + F.col("_off"))
-    )
-    extra = list(derive) if derive else []
-    if total_col:
-        out = out.withColumn(total_col, F.lit(int(off)).cast("long"))
-        extra.append(total_col)
-    if total_out is not None:
-        total_out["n"] = int(off)
-    return out.select(*df.columns, *extra, out_col)
-
-
-def scalable_prefix_sums(
-    df: DataFrame,
-    order_cols: tuple[str, ...],
-    val_cols: tuple[str, ...] = (),
-    derive: dict[str, Column] | None = None,
-    out_prefix: str = "cum_",
-    num_partitions: int | None = None,
-    pin: bool = False,
-    total_cols: dict[str, str] | None = None,
-) -> DataFrame:
-    """Inclusive running sums of SEVERAL columns over ONE total order
-    with ONE range exchange — the n-monoid generalization of
-    :func:`scalable_cumsum`.
-
-    Callers that need multiple prefix coordinates over the same order
-    (q153 reads both a global row position — prefix sum of 1 — and a
-    sample-local position — prefix sum of the sample indicator) would
-    otherwise pay a full staged exchange PER coordinate; here the
-    stage, the stats collect and the broadcast are shared, and each
-    extra coordinate costs one long per partition in the driver stats
-    plus one window sum.
-
-    ``derive`` maps extra summand names to Column expressions that are
-    evaluated ON THE STAGED FRAME, after the exchange: an expensive
-    indicator (q153's salted md5) would otherwise be computed on every
-    pre-exchange pass over the input — the range-bounds sampling job
-    plus the exchange itself each re-evaluate the child projection.
-    Derived columns are summed exactly like ``val_cols``.
-
-    Same pinning rule as the siblings: the staged frame is
-    ``localCheckpoint``ed before the stats job because the offsets are
-    keyed by physical partition id.
-
-    ``total_cols`` maps summand names to output column names holding
-    that summand's GRAND TOTAL as a literal (the scalable_cumsum
-    total rule — the driver's stats fold ends on exactly these
-    values); callers that otherwise aggregate the same totals in a
-    separate subtree (q185's n1/n2 over the events rollup) read them
-    for free."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    staged = (
-        df.repartitionByRange(num, *[F.col(c) for c in order_cols])
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    if derive:
-        for name, expr in derive.items():
-            staged = staged.withColumn(name, expr)
-        val_cols = tuple(val_cols) + tuple(derive)
-    stats = sorted(
-        staged.groupBy("_pid")
-        .agg(*[F.sum(c).alias(c) for c in val_cols])
-        .collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, run = [], {c: 0 for c in val_cols}
-    for r in stats:
-        recs.append((r["_pid"], *[run[c] for c in val_cols]))
-        for c in val_cols:
-            run[c] += r[c] or 0
-    offsets = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [T.StructField("_pid", T.IntegerType())]
-            + [T.StructField(f"_off_{c}", T.LongType()) for c in val_cols]
-        ),
-    )
-    w_local = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    out = staged.join(F.broadcast(offsets), "_pid")
-    for c in val_cols:
-        out = out.withColumn(
-            f"{out_prefix}{c}", F.sum(c).over(w_local) + F.col(f"_off_{c}")
-        )
-    totals = []
-    if total_cols:
-        for c, name in total_cols.items():
-            out = out.withColumn(name, F.lit(int(run[c])).cast("long"))
-            totals.append(name)
-    # derived summands are part of the contract: callers filter on
-    # them (q153 keeps sample rows via the indicator), so emit them
-    # explicitly rather than leaning on missing-reference resolution
-    derived = tuple(derive) if derive else ()
-    out = out.select(
+    """Per-group ``MAX(val) OVER (PARTITION BY part ORDER BY order_cols
+    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)`` — NULL for each
+    group's first row — over :func:`_range_scan`: max is associative,
+    so the local strict-preceding scan of each partition combined with
+    the max over the group's earlier partitions is the global scan.
+    ROWS semantics requires the caller to make ``order_cols`` a total
+    order within each group (append a unique tiebreaker)."""
+    t, w = _range_scan(df, part_col, order_cols, maxes={"m": val_col})
+    w = w.rowsBetween(Window.unboundedPreceding, -1)
+    # greatest() skips NULLs: the local scan is NULL on each
+    # partition's first row, the offset NULL in each group's first
+    # partition — either alone carries the answer.
+    return t.select(
         *df.columns,
-        *derived,
-        *[f"{out_prefix}{c}" for c in val_cols],
-        *totals,
-    )
-    # ``pin=True`` materializes the summed frame for MULTI-CONSUMER
-    # callers (q153 reads it three times — per-group counts plus two
-    # position lookups): without it every downstream scan re-runs the
-    # per-partition window sort and any derived expressions (the md5
-    # indicator); with it they read cached rows. Single-consumer
-    # callers skip the extra materialization. Lazy: the first consumer
-    # action materializes it (every pin consumer opens with a
-    # full-scan aggregate; even a partial first action completes all
-    # partitions at job end — localCheckpoint semantics), merging the
-    # dedicated materialize job into it.
-    return out.transform(_pin_lazy) if pin else out
-
-
-def grouped_row_number(
-    df: DataFrame,
-    part_col: str,
-    order_cols: tuple[str, ...],
-    out_col: str = "rn",
-    num_partitions: int | None = None,
-    count_col: str | None = None,
-) -> DataFrame:
-    """Per-group ``row_number() OVER (PARTITION BY part ORDER BY …)``
-    without a low-cardinality window partition AND without rank
-    semantics: ONE global :func:`scalable_row_number` over
-    (part, *order) minus broadcast per-group offsets (the count of
-    rows in ordering-earlier groups).
-
-    This is the factored form of the position-read pattern that
-    emerged across q153/q164/q145/q123: when a consumer reads
-    POSITIONS (medians, percentile cuts, top-k under unique keys),
-    two_phase_rank's tie-group groupBy+join — which exists only to
-    give ties a shared RANK — is pure overhead; dropping it roughly
-    halved each of those queries' shuffle volume.
-
-    The offsets frame is |groups| rows; its cumulative window is a
-    deliberate single-task sort of metadata. Group ordering inside
-    the offsets window and inside the range exchange are both
-    Spark-native orderings of the same column, so they agree by
-    construction.
-
-    ``count_col`` (optional) additionally emits each group's total row
-    count — the helper computes it anyway for the offsets, and callers
-    that need positions AND group sizes (positional percentile picks:
-    rk == (n+1) div 2) would otherwise pay a second aggregate over the
-    caller's upstream; exposing it makes the checkpointed stage the
-    single source of both."""
-    from pyspark.sql import types as T
-
-    spark = df.sparkSession
-    if num_partitions:
-        num = num_partitions
-    else:
-        try:
-            num = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num = spark.sparkContext.defaultParallelism
-    # The machinery is inlined (not scalable_row_number + a consumer
-    # aggregate) so BOTH offset frames read the pinned staged
-    # materialization directly: the per-pid stats as a tiny collect,
-    # the per-group counts as one hash aggregate over checkpointed
-    # rows — no re-evaluation of the caller's upstream and no forcing
-    # of the ranking window just to count groups.
-    staged = (
-        df.repartitionByRange(
-            num, F.col(part_col), *[F.col(c) for c in order_cols]
-        )
-        .withColumn("_pid", F.spark_partition_id())
-        # lazy: the stats collect below is the materializing action
-        # (one job instead of two — the two_phase_rank merge rule)
-        .transform(_pin_lazy)
-    )
-    stats = sorted(
-        staged.groupBy("_pid").agg(F.count(F.lit(1)).alias("c")).collect(),
-        key=lambda r: r["_pid"],
-    )
-    recs, off = [], 0
-    for r in stats:
-        recs.append((r["_pid"], off))
-        off += r["c"]
-    pid_offs = spark.createDataFrame(
-        recs,
-        T.StructType(
-            [
-                T.StructField("_pid", T.IntegerType()),
-                T.StructField("_poff", T.LongType()),
-            ]
-        ),
-    )
-    w_group = Window.orderBy(part_col).rowsBetween(
-        Window.unboundedPreceding, -1
-    )  # |groups| rows — the single-task cumulative is metadata-sized
-    offs = (
-        staged.groupBy(part_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .select(
-            part_col,
-            *([F.col("_n").alias(count_col)] if count_col else []),
-            F.coalesce(F.sum("_n").over(w_group), F.lit(0)).alias("_goff"),
-        )
-    )
-    w_local = Window.partitionBy("_pid").orderBy(part_col, *order_cols)
-    return (
-        staged.join(F.broadcast(pid_offs), "_pid")
-        .join(F.broadcast(offs), part_col)
-        .withColumn(
-            out_col,
-            F.row_number().over(w_local)
-            + F.col("_poff")
-            - F.col("_goff"),
-        )
-        .select(*df.columns, out_col, *([count_col] if count_col else []))
+        F.greatest(F.max(val_col).over(w), F.col("_off_m")).alias(out_col),
     )
 
 
@@ -715,9 +314,9 @@ def group_median(
     out_col: str = "median",
 ) -> DataFrame:
     """Exact per-group median of a numeric column WITHOUT a
-    low-cardinality window partition: positions come from
-    :func:`grouped_row_number` (range-exchange two-phase), group sizes
-    from one hash aggregate, and the median is the mean of the rows at
+    low-cardinality window partition: positions and group sizes come
+    from one grouped :func:`scalable_prefix_sums` row number, and the
+    median is the mean of the rows at
     positions ⌊(n+1)/2⌋ and ⌊(n+2)/2⌋ — one value for odd n, the
     midpoint (a+b)/2 for even n. The midpoint is ONE IEEE add + ONE
     divide on source doubles, so it verifies value-exactly against an
@@ -739,17 +338,12 @@ def group_median(
     engines the same non-null multiset — the SQL-aggregate convention
     (median() ignores NULLs) — and groups that are all-NULL vanish."""
     df = df.filter(F.col(val_col).isNotNull())
-    # count_col rides the same checkpointed stage that produces the
-    # positions (grouped_row_number computes group sizes anyway for
-    # its offsets) — the r7-era second groupBy().count() over the
-    # caller's upstream plus its broadcast join are gone (r9 VERDICT
-    # "what's wrong" #2: q207 paid that aggregate four times).
-    picked = grouped_row_number(
+    picked = scalable_prefix_sums(
         df.select(part_col, val_col),
-        part_col,
         (val_col,),
-        out_col="_rn",
-        count_col="_n",
+        {"_rn": F.lit(1)},
+        part_col=part_col,
+        totals={"_rn": "_n"},
     ).filter(
         (F.col("_rn") == F.expr("(_n + 1) div 2"))
         | (F.col("_rn") == F.expr("(_n + 2) div 2"))
@@ -765,12 +359,11 @@ def scalable_ntile(
     order_cols: tuple[str, ...],
     buckets: int,
     out_col: str = "bucket",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Global ``ntile(b) OVER (ORDER BY order_cols)`` without the
-    single-task global window — positions come from
-    :func:`scalable_row_number` (range-exchange two-phase) and the
-    bucket is the closed-form ntile rule on (rn, n): with q = n div b
+    single-task global window — positions and the row count n come
+    from one :func:`scalable_prefix_sums` row number, and the bucket
+    is the closed-form ntile rule on (rn, n): with q = n div b
     and r = n mod b, the first r buckets hold q+1 rows and the rest q,
     so rn ≤ r·(q+1) lands in bucket (rn−1) div (q+1) + 1 and anything
     after in bucket r + (rn − r·(q+1) − 1) div q + 1. That is exactly
@@ -779,20 +372,16 @@ def scalable_ntile(
     freedom left is the ORDER, which callers must pin with a unique
     tiebreaker (the q04 contract).
 
-    ``n`` comes from the row-number kernel's driver stats as a LITERAL
-    (the scalable_cumsum total rule) — no n-frame aggregate and no
-    1-row cross join, so consuming the tiled frame never re-triggers a
-    broadcast build (nested ntile calls, q266, previously rebuilt each
-    inner n-frame once per outer kernel execution).
+    ``n`` rides the row number's offsets broadcast — no n-frame
+    aggregate and no 1-row cross join, so consuming the tiled frame
+    never re-triggers a broadcast build (nested ntile calls, q266,
+    previously rebuilt each inner n-frame once per outer kernel
+    execution).
 
     Descending metrics: negate the column (ntile only reads the total
     order, so x DESC ≡ (−x) ASC for any integer metric)."""
-    ranked = scalable_row_number(
-        df,
-        order_cols,
-        out_col="_ntile_rn",
-        num_partitions=num_partitions,
-        total_col="_ntile_n",
+    ranked = scalable_prefix_sums(
+        df, order_cols, {"_ntile_rn": F.lit(1)}, totals={"_ntile_rn": "_ntile_n"}
     )
     b = buckets
     tiled = ranked.withColumn(

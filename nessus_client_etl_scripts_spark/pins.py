@@ -44,11 +44,16 @@ on — whatever runs next.
 
 from __future__ import annotations
 
+import logging
 import threading
 
 from pyspark.sql import DataFrame
 
 _TLS = threading.local()
+_log = logging.getLogger(__name__)
+# a broken cleanup path must fail loudly, but once: a dead JVM fails
+# every later release the same way
+_failure_logged = False
 
 
 def _registry() -> list[DataFrame]:
@@ -77,7 +82,10 @@ def pin_lazy(df: DataFrame) -> DataFrame:
 def drain() -> int:
     """Release every pin registered on this thread; returns how many
     were unpersisted. Safe on never-materialized lazy pins (no-op
-    block removal). Only call at a query boundary — see module doc."""
+    block removal). Only call at a query boundary — see module doc.
+    A release that raises is skipped (and not counted); the first such
+    failure in the process is logged as a warning."""
+    global _failure_logged
     reg = _registry()
     frames, reg[:] = list(reg), []
     n = 0
@@ -94,5 +102,8 @@ def drain() -> int:
             df._jdf.queryExecution().logical().rdd().unpersist(True)
             n += 1
         except Exception:  # noqa: BLE001 — a dead JVM/session must not
-            pass  # turn cleanup into a query failure
+            # turn cleanup into a query failure
+            if not _failure_logged:
+                _failure_logged = True
+                _log.warning("pins.drain: releasing a pin failed", exc_info=True)
     return n

@@ -1026,11 +1026,12 @@ SELECT source, doc_id, rank FROM r WHERE rank <= {k}
 def q50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic uniform k-per-group sample (salted-hash order,
     operators/sampling.py) — reproducible eval subsets without rand().
-    Ranking runs through grouped_row_number (row_number with doc_id as
-    the final tiebreak — exactly k rows even under a 48-bit hash
-    collision at the boundary, where rank() would return k+1), and the
-    handful of source values never funnels the table into a handful of
-    tasks (the q40/q47 scale fix applied at the operator level)."""
+    Ranking runs through the grouped scalable_prefix_sums row number
+    (row_number with doc_id as the final tiebreak — exactly k rows
+    even under a 48-bit hash collision at the boundary, where rank()
+    would return k+1), and the handful of source values never funnels
+    the table into a handful of tasks (the q40/q47 scale fix applied
+    at the operator level)."""
     from ..operators.sampling import group_sample
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1730,7 +1731,7 @@ def q75(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-proportional (PPS) systematic sample of documents, sized
     by character count: rows whose cumulative-weight interval crosses a
     5000-char grid point. The global running sum is the DISTRIBUTED
-    prefix-sum (operators/windows.py::scalable_cumsum — range
+    prefix-sum (operators/windows.py::scalable_prefix_sums — range
     repartition + driver-side P-row offset scan + per-partition local
     windows), not a partition-less ``Window.orderBy`` that would funnel
     100 TB through one task. Selection itself is row-local integer
@@ -2005,12 +2006,12 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     seed:doc_id — reproducible across runs, engines, and retries; a
     new seed per epoch gives a fresh permutation) and its GLOBAL
     position in that order. The position comes from the distributed
-    two-phase rank (operators/windows.py::two_phase_rank with a
-    constant group), NOT a partition-less ``row_number() OVER (ORDER
-    BY ...)`` that would funnel 100 TB through one task — data-loader
-    shards then read contiguous pos ranges.
+    prefix sum of 1 (operators/windows.py::scalable_prefix_sums), NOT
+    a partition-less ``row_number() OVER (ORDER BY ...)`` that would
+    funnel 100 TB through one task — data-loader shards then read
+    contiguous pos ranges.
 
-    ``pos`` is the true global ROW NUMBER (``grn_col``), not the rank:
+    ``pos`` is the true global ROW NUMBER, not the rank:
     rank collapses shuffle_key ties to their minimum position, and
     48-bit keys collide with near-certainty at billions of docs
     (~1800 expected collisions at 1e9 rows by birthday math), which
@@ -2018,7 +2019,7 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract. The row number breaks ties by doc_id, exactly matching
     the oracle's ``row_number() OVER (ORDER BY shuffle_key, doc_id)``
     at any scale."""
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     keyed = docs.select(
@@ -2032,8 +2033,8 @@ def q92(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("shuffle_key"),
         F.lit(0).alias("_all"),
     )
-    ranked = scalable_row_number(
-        keyed, ("shuffle_key", "doc_id"), out_col="pos"
+    ranked = scalable_prefix_sums(
+        keyed, ("shuffle_key", "doc_id"), {"pos": F.lit(1)}
     )
     return ranked.select("doc_id", "shuffle_key", F.col("pos").cast("long"))
 
@@ -3256,10 +3257,10 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the selection needs an exact GLOBAL running sum in
     quality order — the single-task ``Window.orderBy`` trap — so it
-    rides :func:`scalable_cumsum` (two-phase distributed prefix sum:
-    range-exchange on (−diversity, doc_id), P-row stats collect,
+    rides :func:`scalable_prefix_sums` (two-phase distributed prefix
+    sum: range-exchange on (−diversity, doc_id), P-row stats collect,
     broadcast offsets). The corpus total is the kernel's driver-stats
-    grand total, attached as a literal (``total_col``) — no separate
+    grand total, read off its offsets broadcast (``totals``) — no separate
     aggregate subtree; the budget predicate is then row-local. At 100 TB
     the only data-size shuffle is the range exchange itself — the same
     cost q92's training shuffle already pays — and everything else is
@@ -3267,7 +3268,7 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (double division, doc_id asc), so the cut set is
     value-exact, not approximate."""
     from ..catalog import spread_for_compute
-    from ..operators.windows import scalable_cumsum
+    from ..operators.windows import scalable_prefix_sums
 
     docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     staged = docs.select("doc_id", F.split("text", " ").alias("toks"))
@@ -3278,15 +3279,14 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_distinct("toks")).cast("double") / F.size("toks")
         ).alias("diversity"),
     ).withColumn("neg_div", -F.col("diversity"))
-    # the grand total rides the cumsum kernel's driver stats as a
-    # literal (total_col) — the separate t.agg(sum) subtree re-ran the
-    # docs scan + split + array_distinct in its own execution
-    c = scalable_cumsum(
+    # the grand total rides the prefix kernel's driver stats
+    # (totals) — the separate t.agg(sum) subtree re-ran the docs scan
+    # + split + array_distinct in its own execution
+    c = scalable_prefix_sums(
         t,
         ("neg_div", "doc_id"),
-        "n_tokens",
-        out_col="cum_tokens",
-        total_col="total",
+        {"cum_tokens": "n_tokens"},
+        totals={"cum_tokens": "total"},
     )
     return (
         c.filter(
@@ -3477,14 +3477,14 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-local scan algebra; dedup's winner election is a hash-groupBy
     on normalized text with map-side partial MIN (the only shuffle
     that carries text) followed by a fine-grained doc_id semi-join;
-    the budget fill rides `scalable_cumsum` (range exchange +
-    broadcast offsets); the final order rides `two_phase_rank`'s
-    global row number. No partition-less window, no driver-side data
-    loop anywhere — the composition adds zero shuffles beyond what
-    the stages individually pay."""
+    the budget fill and the final order both ride
+    `scalable_prefix_sums` (range exchange + broadcast offsets; the
+    order is its running sum of 1). No partition-less window, no
+    driver-side data loop anywhere — the composition adds zero
+    shuffles beyond what the stages individually pay."""
     from ..catalog import spread_for_compute
     from ..operators.text import normalize_text, quality_keep
-    from ..operators.windows import scalable_cumsum, scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     quality = docs.filter(quality_keep("text"))
@@ -3506,15 +3506,15 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("neg_div", -F.col("diversity"))
     )
-    # grand total as a literal (total_col) — the separate t.agg(sum)
-    # subtree re-ran the quality filter + dedup semi-join + tokenize
-    # once more per execution, plus a 1-row broadcast join
-    c = scalable_cumsum(
+    # grand total off the kernel's driver stats (totals) — the
+    # separate t.agg(sum) subtree re-ran the quality filter + dedup
+    # semi-join + tokenize once more per execution, plus a 1-row
+    # broadcast join
+    c = scalable_prefix_sums(
         t,
         ("neg_div", "doc_id"),
-        "n_tokens",
-        out_col="cum_tokens",
-        total_col="total",
+        {"cum_tokens": "n_tokens"},
+        totals={"cum_tokens": "total"},
     )
     sel = (
         c
@@ -3544,8 +3544,8 @@ def q112(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("shuffle_key"),
         F.lit(0).alias("_all"),
     ).transform(_pin_lazy)
-    ranked = scalable_row_number(
-        keyed, ("shuffle_key", "doc_id"), out_col="pos"
+    ranked = scalable_prefix_sums(
+        keyed, ("shuffle_key", "doc_id"), {"pos": F.lit(1)}
     )
     return ranked.select(
         F.col("pos").cast("long").alias("pos"),

@@ -1189,7 +1189,7 @@ def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The interleave (operators/layout.zorder_key) is 5 shift/mask ops
     per dimension, fused into the scan by whole-stage codegen; the
-    global file assignment is scalable_row_number's range-exchange
+    global file assignment is scalable_prefix_sums' range-exchange
     row number (NO single-task Window.orderBy, and no two_phase_rank
     tie-group join — Z-values are near-unique and (zval, rk) is a
     total order, so RANK semantics would only double the shuffle)
@@ -1204,7 +1204,7 @@ def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-scan objects (/root/reference/export.py upload loop); this is
     the layout-maintenance pass on top of SURVEY.md §2 S4."""
     from ..operators.layout import zone_maps, zorder_key
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
     keyed = li.select(
@@ -1215,7 +1215,7 @@ def q119(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rk"),
     )
-    ranked = scalable_row_number(keyed, order_cols=("zval", "rk"), out_col="rn")
+    ranked = scalable_prefix_sums(keyed, ("zval", "rk"), {"rn": F.lit(1)})
     files = ranked.withColumn(
         "file_id", F.expr(f"(rn - 1) div {_Q119_ROWS_PER_FILE}")
     )
@@ -1259,7 +1259,7 @@ def q120(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The listing itself is metadata-sized (one row per file), but a
     100 TB table can hold millions of files, so the prefix sum is the
-    distributed scalable_cumsum — range exchange + local scan +
+    distributed scalable_prefix_sums — range exchange + local scan +
     broadcast offsets — not a single-task global window. Everything
     is exact int64 (sizes are byte counts), so the plan is
     value-portable to the oracle's window formulation.
@@ -1314,7 +1314,7 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
     size desc), a point is dominated IFF some strictly-earlier point
     has size >= its own, so the skyline is one RUNNING MAX — and that
     scan is scalable_running_max (operators/windows), the
-    monoid-scan sibling of scalable_cumsum: range exchange over
+    monoid-scan sibling of scalable_prefix_sums: range exchange over
     (brand, price, -size), per-partition local window, broadcast
     prefix-of-partition-maxima — NO 25-task brand-partitioned
     window, linearithmic instead of quadratic. Every driver row is
@@ -1339,7 +1339,6 @@ def q122(spark: SparkSession, sf_dir: str) -> DataFrame:
         order_cols=("p_retailprice", "neg_size"),
         val_col="p_size",
         out_col="prior_max_size",
-        strict_preceding=True,
     )
     keep = scanned.filter(
         F.col("prior_max_size").isNull()
@@ -1400,12 +1399,13 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both medians are ORDER STATISTICS per language, and lang is a
     handful of values: Window.partitionBy(lang).orderBy(...) would
     funnel the corpus through |langs| tasks, so both passes run
-    grouped_row_number (range exchange + broadcast offsets — no
-    tie-group join, positions are all a median read needs) and
+    the grouped scalable_prefix_sums row number (range exchange +
+    broadcast offsets — no tie-group join, positions are all a
+    median read needs) and
     select rn == (n+1)//2 against a broadcast per-group count. Two
     scans + two fine-grained position passes, never a
     low-cardinality window."""
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents").select(
         "lang", "doc_id", "n_chars"
@@ -1413,8 +1413,8 @@ def q123(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n"))
 
     def _group_median(df: DataFrame, val: str, out: str) -> DataFrame:
-        ranked = grouped_row_number(
-            df, "lang", (val, "doc_id"), out_col="rn"
+        ranked = scalable_prefix_sums(
+            df, (val, "doc_id"), {"rn": F.lit(1)}, part_col="lang"
         )
         return (
             ranked.join(F.broadcast(cnt), "lang")

@@ -254,7 +254,7 @@ def q345(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-constraint greedy distributable; the audit emits per-source
     totals, cap survivors, final selections and the selected share.
 
-    Scale: the global prefix sum rides :func:`scalable_cumsum`
+    Scale: the global prefix sum rides :func:`scalable_prefix_sums`
     (two-phase distributed scan — ``Window.orderBy`` with no partition
     is the single-task trap); the per-source prefix reuses the SAME
     range exchange (source leads the sort key), subtracting each
@@ -263,7 +263,7 @@ def q345(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast. Census: cap and budget cuts both fire at every SF
     (2/5 of mass survives phase 1 > 1/4 budget by construction)."""
     from ..catalog import spread_for_compute
-    from ..operators.windows import scalable_cumsum
+    from ..operators.windows import scalable_prefix_sums
 
     docs = spread_for_compute(load_table(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
@@ -283,11 +283,10 @@ def q345(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE range exchange ordered (source, -density, doc_id) carries
     # both prefixes: the global running sum, minus the source's
     # starting offset, IS the per-source running sum
-    c = scalable_cumsum(
+    c = scalable_prefix_sums(
         scored.withColumn("neg_density", -F.col("density_micro")),
         ("source", "neg_density", "doc_id"),
-        "tok",
-        out_col="cum_src_order",
+        {"cum_src_order": "tok"},
     )
     src = scored.groupBy("source").agg(
         F.sum("tok").cast("long").alias("stot"),
@@ -309,12 +308,11 @@ def q345(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("scum")
         <= F.expr(f"stot * {_Q345_CAP_NUM} div {_Q345_CAP_DEN}")
     ).transform(_pin_lazy)
-    p2 = scalable_cumsum(
+    p2 = scalable_prefix_sums(
         surv.select("doc_id", "source", "tok", "density_micro")
         .withColumn("neg_density", -F.col("density_micro")),
         ("neg_density", "doc_id"),
-        "tok",
-        out_col="gcum",
+        {"gcum": "tok"},
     )
     total = scored.agg(F.sum("tok").cast("long").alias("gtot"))
     sel = p2.join(F.broadcast(total)).filter(

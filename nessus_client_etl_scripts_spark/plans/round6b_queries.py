@@ -913,35 +913,34 @@ def q145(spark: SparkSession, sf_dir: str) -> DataFrame:
     verbatim, so no float divergence is possible).
 
     Both rankings are POSITION reads (row_number, never rank/pct),
-    so they ride scalable_row_number — the 100 TB-safe replacement
+    so they ride scalable_prefix_sums — the 100 TB-safe replacement
     for a low-cardinality window partition that also skips
     two_phase_rank's tie-group groupBy+join (rank semantics would
     double the shuffle for nothing here; the q153 lesson applied
-    back): the global ranking directly, the per-type ranking as one
-    global row_number over (type, value, id) minus broadcast
-    per-type offsets. The position join is a fine-grained equi-join
-    on a long key."""
-    from ..operators.windows import grouped_row_number, scalable_row_number
+    back): the global ranking directly, the per-type ranking with
+    ``part_col`` (broadcast per-type offsets). The position join is a
+    fine-grained equi-join on a long key."""
+    from ..operators.windows import scalable_prefix_sums
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     )
-    # n_total rides the global kernel's driver stats as a PYTHON int
-    # (total_out → a literal in the pos expression) and n_grp rides
-    # the grouped kernel's offsets pass (count_col) — the two
-    # standalone count aggregates each re-ran a full events scan per
-    # consuming execution, plus their broadcast joins; all gone
-    tot: dict = {}
-    g = scalable_row_number(
-        ev.select("value", "event_id"), ("value", "event_id"),
-        out_col="pos",
-        total_out=tot,
-    ).select("pos", F.col("value").alias("q_value"))
-    s = grouped_row_number(
-        ev, "event_type", ("value", "event_id"), out_col="rn",
-        count_col="n_grp",
-    ).select("event_id", "event_type", "value", "rn", "n_grp")
-    n_total = F.lit(tot["n"]).cast("long")
+    # n_total and n_grp ride the kernels' driver stats (totals) — the
+    # two standalone count aggregates each re-ran a full events scan
+    # per consuming execution, plus their broadcast joins; all gone.
+    # The per-type ranking reads the global ranking's input rows, so
+    # n_total arrives there as a column; the global position itself
+    # is pruned from that read.
+    ranked = scalable_prefix_sums(
+        ev, ("value", "event_id"), {"pos": F.lit(1)},
+        totals={"pos": "n_total"},
+    )
+    g = ranked.select("pos", F.col("value").alias("q_value"))
+    s = scalable_prefix_sums(
+        ranked.drop("pos"), ("value", "event_id"), {"rn": F.lit(1)},
+        part_col="event_type", totals={"rn": "n_grp"},
+    ).select("event_id", "event_type", "value", "rn", "n_grp", "n_total")
+    n_total = F.col("n_total")
     m = (
         s.select(
             "event_id",
@@ -1438,10 +1437,10 @@ def q151(spark: SparkSession, sf_dir: str) -> DataFrame:
     zone maps prune; the linear layout's suppkey ranges each span
     the whole domain and scan everything — the emitted table is that
     argument as data. All planning math runs on the |files|-row
-    metadata frame; file assignment is scalable_row_number (range
-    exchange, never a single-task window)."""
+    metadata frame; file assignment is a scalable_prefix_sums row
+    number (range exchange, never a single-task window)."""
     from ..operators.layout import zone_maps, zorder_key
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
     keyed = li.select(
@@ -1453,7 +1452,7 @@ def q151(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpinned, each would rescan parquet and re-interleave the Z bits
     layouts = []
     for tag, order in (("zorder", ("zval", "rk")), ("linear", ("l_partkey", "rk"))):
-        rn = scalable_row_number(keyed, order, out_col="rn")
+        rn = scalable_prefix_sums(keyed, order, {"rn": F.lit(1)})
         files = zone_maps(
             rn.select(
                 "l_suppkey",

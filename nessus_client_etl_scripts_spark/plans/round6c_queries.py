@@ -48,14 +48,10 @@ from pyspark.sql import functions as F
 from ..catalog import load_table, spread_for_compute
 from ..operators.sampling import HASH_SPACE, _u48
 from ..operators.text import normalize_text, tokens
-from ..operators.windows import (
-    grouped_row_number,
-    scalable_prefix_sums,
-    scalable_running_max,
-)
+from ..operators.windows import scalable_prefix_sums, scalable_running_max
 from .corpus_queries import _NORM_SQL
 from .testdata_queries import register
-from ..pins import pin as _pin
+from ..pins import pin as _pin, pin_lazy as _pin_lazy
 
 # ---------------------------------------------------------------------------
 # q153 — hash-sampled quantiles with exact calibration
@@ -162,19 +158,16 @@ def q153(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Order by (flag, cents) only: the emitted VALUE at a position is
     # tie-invariant (all rows in a cents-tie run carry the same cents),
     # so the unique-key tiebreak would buy nothing and widen the range
-    # exchange. The salted sample indicator is a late-derived summand —
-    # its md5 runs once, on the staged frame.
+    # exchange. The salted sample indicator is derived post-exchange —
+    # its md5 runs on the staged partitions, not the scan's few splits.
     cum = scalable_prefix_sums(
         base,
         ("flag", "cents"),
+        {"cum_one": F.lit(1), "cum_ins": "ins"},
         derive={
-            "one": F.lit(1).cast("long"),
-            "ins": (_u48(F.col("k"), _Q153_SALT) < _Q153_THRESH).cast(
-                "long"
-            ),
+            "ins": (_u48(F.col("k"), _Q153_SALT) < _Q153_THRESH).cast("long")
         },
-        pin=True,  # three consumers below — counts, fx, sx
-    )
+    ).transform(_pin_lazy)  # three consumers below — counts, fx, sx
     # Per-flag counts: ONE aggregate over the pinned staged frame,
     # collected to the driver — |flags| is the l_returnflag domain
     # (3 values), bounded small state (the q39 pattern). r13: the
@@ -695,7 +688,7 @@ def q158(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = scalable_running_max(
         e, part_col="g", order_cols=("event_id",), val_col="tsec",
-        out_col="wm", strict_preceding=True,
+        out_col="wm",
     )
     lateness = F.greatest(
         F.coalesce(F.col("wm") - F.col("tsec"), F.lit(0)), F.lit(0)
@@ -1185,8 +1178,8 @@ def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-dependent ±ulp divergence (PLANS.md rule #17).
 
     The 5-value priority column never becomes a window partition: the
-    ranking is grouped_row_number (one global scalable_row_number over
-    (prio, cents, key) minus broadcast per-group offsets). One range
+    ranking is the grouped scalable_prefix_sums row number over
+    (prio; cents, key) with broadcast per-group offsets. One range
     exchange + one map-side-combined moment aggregate — no second
     pass, no sort of the moments."""
     orders = load_table(spark, sf_dir, "orders")
@@ -1195,7 +1188,9 @@ def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         F.col("o_orderkey").alias("k"),
     )
-    ranked = grouped_row_number(base, "prio", ("cents", "k"), out_col="i")
+    ranked = scalable_prefix_sums(
+        base, ("cents", "k"), {"i": F.lit(1)}, part_col="prio"
+    )
     dec = "decimal(38,0)"
     mom = (
         ranked.select("prio", "cents", "i")

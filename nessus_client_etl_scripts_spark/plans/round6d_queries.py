@@ -33,7 +33,7 @@ from ..operators.similarity import collect_bounded_side, round_half_away
 from ..operators.text import normalize_text
 from .corpus_queries import _NORM_SQL
 from .testdata_queries import register
-from ..pins import pin as _pin
+from ..pins import pin as _pin, pin_lazy as _pin_lazy
 
 # ---------------------------------------------------------------------------
 # q177 — margin-based mutual-kNN pair mining (bitext-mining shape)
@@ -1130,15 +1130,15 @@ def q185(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("c2"),
     )
-    # n1/n2 are the prefix kernel's driver-stats grand totals,
-    # attached as literals (total_cols) — the separate m.agg subtree
-    # re-ran the events scan + rollup in its own execution, plus a
-    # 1-row broadcast cross, both gone
+    # n1/n2 are the prefix kernel's driver-stats grand totals
+    # (totals) — the separate m.agg subtree re-ran the events scan +
+    # rollup in its own execution, plus a 1-row broadcast cross, both
+    # gone
     cum = scalable_prefix_sums(
         m,
         ("vm",),
-        val_cols=("c1", "c2"),
-        total_cols={"c1": "n1", "c2": "n2"},
+        {"cum_c1": "c1", "cum_c2": "c2"},
+        totals={"cum_c1": "n1", "cum_c2": "n2"},
     )
     d = cum.select(
         "vm",
@@ -1556,8 +1556,8 @@ def q189(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.lit(1) - F.col("pos")).cast("long").alias("c_neg"),
     )
     cum = scalable_prefix_sums(
-        g, ("source", "vm"), val_cols=("c_neg",), pin=True
-    )  # two consumers: the per-source totals and the U terms
+        g, ("source", "vm"), {"cum_c_neg": "c_neg"}
+    ).transform(_pin_lazy)  # two consumers: the per-source totals and the U terms
     w = Window.orderBy("source").rowsBetween(
         Window.unboundedPreceding, -1
     )  # |sources| rows — metadata-sized
@@ -1711,7 +1711,9 @@ def q190(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(_pin)
     )
     cal = g.filter(~F.col("is_test")).select("vm", "cnt")
-    cum = scalable_prefix_sums(cal, ("vm",), val_cols=("cnt",), pin=True)
+    cum = scalable_prefix_sums(cal, ("vm",), {"cum_cnt": "cnt"}).transform(
+        _pin_lazy
+    )
     ncal = cum.agg(F.sum("cnt").cast("long").alias("n_cal"))
     alphas = F.explode(
         F.array(*[F.lit(a).cast("long") for a in _Q190_ALPHAS])
@@ -2888,7 +2890,9 @@ def q199(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("wn"),
         )
     )
-    cum = scalable_prefix_sums(g, ("b", "vm"), val_cols=("wn",), pin=True)
+    cum = scalable_prefix_sums(g, ("b", "vm"), {"cum_wn": "wn"}).transform(
+        _pin_lazy
+    )
     wb = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
     offs = (
         cum.groupBy("b")

@@ -481,10 +481,10 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer/string ops in both engines (the q121 no-libm rule); the
     least-squares moments are exact BIGINT sums and the slope is ONE
     IEEE division of two exact integers. Ranking uses
-    scalable_row_number (range-exchange two-phase), never a
+    scalable_prefix_sums (range-exchange two-phase), never a
     single-partition global window — vocabulary at web scale is 10⁸
     rows and still ranks across all cores."""
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
@@ -494,10 +494,8 @@ def q204(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nc", -F.col("c"))
     )
     # the ranking is GLOBAL (the old constant "_g" group bought
-    # nothing): scalable_row_number drops grouped_row_number's
-    # per-group offsets aggregate + metadata window + second
-    # broadcast join from every consuming execution
-    ranked = scalable_row_number(vocab, ("nc", "tok"), out_col="rank")
+    # nothing): no part_col, so no per-group offsets
+    ranked = scalable_prefix_sums(vocab, ("nc", "tok"), {"rank": F.lit(1)})
     xy = ranked.select(
         (F.length(F.bin(F.col("rank"))) - 1).cast("long").alias("x"),
         (F.length(F.bin(F.col("c"))) - 1).cast("long").alias("y"),
@@ -718,7 +716,7 @@ def q207(spark: SparkSession, sf_dir: str) -> DataFrame:
     wreck mean/stddev gates (a single corrupt feed day shifts a mean
     arbitrarily; the median moves one rank). Medians come from
     operators/windows.group_median — positions via the range-exchange
-    grouped_row_number, NEVER a per-type single-task window; the
+    grouped scalable_prefix_sums, NEVER a per-type single-task window; the
     oracle replays the identical (a+b)/2 midpoint formulation (an
     engine-native median() would interpolate with different op order).
     Two position passes + one conditional aggregate; every emitted

@@ -696,10 +696,10 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
     (±1 boundary effects).
 
     Scale: per-source ranks and the global order both come from
-    grouped_row_number's two-phase range exchange — NO single-
+    the two-phase range exchange of scalable_prefix_sums — NO single-
     partition global window, the q204/q40 rule; the schedule of a
     trillion-document mix sorts across all executors."""
-    from ..operators.windows import grouped_row_number, scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     d = docs.select(
@@ -709,8 +709,8 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1 + (F.substring("source", 4, 10).cast("long") % 4)).alias("w"),
         (-F.col("n_chars")).alias("_nnc"),
     )
-    r = grouped_row_number(
-        d, "source", ("_nnc", "doc_id"), out_col="src_rank"
+    r = scalable_prefix_sums(
+        d, ("_nnc", "doc_id"), {"src_rank": F.lit(1)}, part_col="source"
     )
     k = r.select(
         "doc_id",
@@ -721,11 +721,9 @@ def q219(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("ikey"),
     )
-    # global order is ONE group (the q204 rule): scalable_row_number
-    # drops grouped_row_number's per-group offsets aggregate, its
-    # metadata window and the second broadcast join for a constant key
-    sched = scalable_row_number(
-        k, ("ikey", "source", "doc_id"), out_col="pos"
+    # global order is ONE group (the q204 rule): no part_col
+    sched = scalable_prefix_sums(
+        k, ("ikey", "source", "doc_id"), {"pos": F.lit(1)}
     )
     return sched.select(
         "doc_id",
@@ -1031,7 +1029,7 @@ def q221(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts.  Scale: two aggregations over the corpus (language counts,
     kept counts) and a per-language rank — the language-count frame is
     dimension-sized and broadcasts."""
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     # r12 opt round: pinned eagerly — the |langs|-row count frame
@@ -1059,13 +1057,13 @@ def q221(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("quota"),
     )
-    ranked = grouped_row_number(
+    ranked = scalable_prefix_sums(
         docs.select(
             "doc_id", "lang", (-F.col("n_chars")).alias("_nnc")
         ),
-        "lang",
         ("_nnc", "doc_id"),
-        out_col="rk",
+        {"rk": F.lit(1)},
+        part_col="lang",
     )
     return (
         ranked.join(F.broadcast(quota), "lang")
@@ -1322,7 +1320,7 @@ def q224(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).cast("long").alias("n_items"))
     # p is HIGH-cardinality (parts ~ 20k/SF), so a plain hash-partitioned
     # window is the right rank plan here — the two-phase
-    # grouped_row_number machinery exists for LOW-cardinality keys and
+    # grouped prefix-sum machinery exists for LOW-cardinality keys and
     # costs an extra range exchange this key does not need (measured
     # ~3.5 s of the query at sf0.1).
     w = Window.partitionBy("p").orderBy(
@@ -1629,7 +1627,7 @@ def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnels into one task: the global position comes from the
     range-exchange two-phase row number (operators/windows), so the
     only sorts are per-partition."""
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     docs = load_table(spark, sf_dir, "documents")
     c = (
@@ -1639,7 +1637,7 @@ def q227(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    r = scalable_row_number(c, ("c", "w"), out_col="i").select(
+    r = scalable_prefix_sums(c, ("c", "w"), {"i": F.lit(1)}).select(
         "c", F.col("i").cast("long").alias("i")
     )
     s = r.agg(
@@ -3231,11 +3229,11 @@ def q244(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic, the interpolation pins per bucket in milli units.
 
     Scale: equi-width is one map-side-combined groupBy; equi-depth
-    boundary positions are read from a scalable_row_number global rank
+    boundary positions are read from a scalable_prefix_sums global rank
     (range exchange — NOT a single-partition window) joined against
     {b} broadcast positions; both audits then run on {b}-row frames."""
     orders = load_table(spark, sf_dir, "orders")
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     c = orders.select(
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("c"),
@@ -3277,7 +3275,7 @@ def q244(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("width").alias("histogram"),
         F.sum(est).cast("long").alias("est_milli"),
     )
-    ranked = scalable_row_number(c, ("c", "k"), out_col="rn")
+    ranked = scalable_prefix_sums(c, ("c", "k"), {"rn": F.lit(1)})
     dpos = (
         spark.range(_Q244_B)
         .select(F.col("id").alias("b"))
@@ -3949,7 +3947,7 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized (up to |users| distinct revenue sums), so it runs through
     the range-exchange two-phase scan (operators/windows), not a
     single-task global window — then one-row algebra."""
-    from ..operators.windows import scalable_cumsum
+    from ..operators.windows import scalable_prefix_sums
 
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
@@ -3964,7 +3962,7 @@ def q251(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t1"),
     )
     # exclusive prefix (rows strictly below v) = inclusive − own t
-    ranked = scalable_cumsum(vals, ("v",), "t", out_col="_ct").select(
+    ranked = scalable_prefix_sums(vals, ("v",), {"_ct": "t"}).select(
         "v",
         "t",
         "t1",
@@ -4797,7 +4795,7 @@ def q259(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts dimension is ~2·10⁸ keys at 100 TB, too big for the
     single-task global window the naive plan would use (revenue desc
     negated into an ascending key, the scalable_ntile contract)."""
-    from ..operators.windows import scalable_cumsum
+    from ..operators.windows import scalable_prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy(F.col("l_partkey").alias("part")).agg(
@@ -4805,17 +4803,16 @@ def q259(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("rev_cents")
     )
-    # total revenue = the kernel's driver-stats grand total, attached
-    # as a literal (total_col) — exact for ANY sign of rev_cents (it
+    # total revenue = the kernel's driver-stats grand total
+    # (totals) — exact for ANY sign of rev_cents (it
     # is the sum of the same per-partition sums), retiring the r9
     # max(cum) non-negativity precondition AND the aggregate + 1-row
     # cross join that read it. q330 reads its totals the same way.
-    ranked = scalable_cumsum(
+    ranked = scalable_prefix_sums(
         rev.withColumn("_neg_rev", -F.col("rev_cents")),
         ("_neg_rev", "part"),
-        "rev_cents",
-        out_col="cum",
-        total_col="t",
+        {"cum": "rev_cents"},
+        totals={"cum": "t"},
     ).select(
         "part", "rev_cents", F.col("cum").cast("long").alias("cum"), "t"
     )
@@ -5633,17 +5630,19 @@ def q267(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross of 5 cut rows against that frame.  No per-
     checkpoint rescans of the corpus."""
     docs = load_table(spark, sf_dir, "documents")
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     # the token arrays are DERIVED on the staged frame (post-exchange):
     # passed as an input column they were tokenized TWICE (range-bounds
     # sampling pass + exchange map side) and shipped through the range
     # exchange; now the exchange carries (doc_id, text) only and
-    # normalize+tokenize runs once, in the consuming action
-    ranked = scalable_row_number(
+    # normalize+tokenize runs once, in the consuming action (derived
+    # after the ranking instead, the size(l) filter below would
+    # re-tokenize every row)
+    ranked = scalable_prefix_sums(
         docs.select("doc_id", "text"),
         ("doc_id",),
-        out_col="rk",
+        {"rk": F.lit(1)},
         derive={"l": tokens(normalize_text("text"))},
     ).drop("text")
     n = ranked.agg(F.max("rk").cast("long").alias("n"))
@@ -5880,11 +5879,11 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings.
 
     Scale: the month is a LOW-cardinality partition key, so the rank
-    runs through grouped_row_number's range-exchange form — the q207
-    rule — never a per-month window funnel."""
+    runs through the grouped scalable_prefix_sums range-exchange
+    form — the q207 rule — never a per-month window funnel."""
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     ct = li.join(
         orders.select("o_orderkey", "o_orderdate"),
@@ -5901,14 +5900,15 @@ def q269(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_orderkey").alias("k"),
         F.col("l_linenumber").alias("ln"),
     )
-    # count_col: group sizes come from the rank machinery's own
-    # offsets aggregate (it counts every group anyway) instead of a
+    # totals: group sizes come from the rank machinery's own
+    # offsets (it counts every group anyway) instead of a
     # second full consumer of the ranked frame — the old
     # max(rk)-aggregate + broadcast join re-ran the staged window
     # and its offset joins once more (the whole subtree appeared
     # twice in the plan, 26 Exchanges → half that)
-    j = grouped_row_number(
-        ct, "ym", ("days", "k", "ln"), out_col="rk", count_col="n"
+    j = scalable_prefix_sums(
+        ct, ("days", "k", "ln"), {"rk": F.lit(1)}, part_col="ym",
+        totals={"rk": "n"},
     )
     return j.groupBy("ym", "n").agg(
         F.max(

@@ -2323,7 +2323,7 @@ def q291(spark: SparkSession, sf_dir: str) -> DataFrame:
     key), with n read back as max(rn) from the checkpointed stage
     instead of a separate count() action; then all algebra on 10
     decile rows."""
-    from ..operators.windows import scalable_row_number
+    from ..operators.windows import scalable_prefix_sums
 
     ev = load_table(spark, sf_dir, "events")
     d = F.col("ts").cast("date")
@@ -2363,14 +2363,14 @@ def q291(spark: SparkSession, sf_dir: str) -> DataFrame:
         "treated",
         F.coalesce("converted", F.lit(0)).alias("converted"),
     )
-    # r12 opt round: n as the kernel's driver-known total (total_col)
+    # r12 opt round: n as the kernel's driver-known total (totals)
     # — the max(rn) aggregate re-scanned the checkpointed stage and
     # its broadcast rebuilt once per consuming action
-    ranked = scalable_row_number(
+    ranked = scalable_prefix_sums(
         subj.withColumn("_neg_score", -F.col("score")),
         ("_neg_score", "user_id"),
-        out_col="rn",
-        total_col="_n",
+        {"rn": F.lit(1)},
+        totals={"rn": "_n"},
     )
     bucketed = ranked.select(
         F.expr("((rn - 1) * 10) div _n").alias("decile"),
@@ -2703,14 +2703,14 @@ def q294(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keys over an EVENTS-scale frame, so positions AND group sizes
     # come from ONE two-phase grouped row number pass
     # (operators/windows), never a |types|-task window sort
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
-    ranked = grouped_row_number(
+    ranked = scalable_prefix_sums(
         v.select("event_type", "cents", "event_id"),
-        "event_type",
         ("cents", "event_id"),
-        out_col="rk",
-        count_col="n",
+        {"rk": F.lit(1)},
+        part_col="event_type",
+        totals={"rk": "n"},
     ).select("event_type", "cents", "rk", "n")
     exact = ranked.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n"),
@@ -3294,13 +3294,13 @@ def _q299_pairs(v: DataFrame, sizes: DataFrame) -> DataFrame:
     reference frame is ≤ |labels|·max(cap, m) rows and broadcast.
     Factored out so the pair-count cap is unit-testable."""
     from ..operators.similarity import dot
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
-    ranked = grouped_row_number(
+    ranked = scalable_prefix_sums(
         v.withColumn("_h", F.expr(_Q299_HASH)),
-        "label",
         ("_h", "vec_id"),
-        out_col="_srn",
+        {"_srn": F.lit(1)},
+        part_col="label",
     )
     # norms once per VECTOR, not per pair — each pair then costs one
     # dot product instead of three
@@ -3874,14 +3874,14 @@ def q303(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the outer rank is |users| rows per TYPE — an entity-scale frame
     # under a handful of partition keys, so positions AND group sizes
     # come from ONE two-phase grouped row number pass
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
-    ranked2 = grouped_row_number(
+    ranked2 = scalable_prefix_sums(
         userp.select("event_type", "p90_user", "user_id"),
-        "event_type",
         ("p90_user", "user_id"),
-        out_col="rk",
-        count_col="n",
+        {"rk": F.lit(1)},
+        part_col="event_type",
+        totals={"rk": "n"},
     ).select("event_type", "p90_user", "rk", "n")
     return ranked2.groupBy("event_type").agg(
         F.max("n").cast("long").alias("n_users"),
@@ -5124,14 +5124,14 @@ def q315(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y_cents")
         )
     )
-    from ..operators.windows import grouped_row_number
+    from ..operators.windows import scalable_prefix_sums
 
-    ranked = grouped_row_number(
+    ranked = scalable_prefix_sums(
         y.select("arm", "y_cents", "user_id"),
-        "arm",
         ("y_cents", "user_id"),
-        out_col="rk",
-        count_col="n",
+        {"rk": F.lit(1)},
+        part_col="arm",
+        totals={"rk": "n"},
     ).select("arm", "y_cents", "rk", "n")
 
     def pick(expr):
@@ -6344,7 +6344,9 @@ def q327(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("long").alias("cnt"),
         )
     )
-    pre = scalable_prefix_sums(g, ("flag", "price"), ("w", "cnt"), pin=True)
+    pre = scalable_prefix_sums(
+        g, ("flag", "price"), {"cum_w": "w", "cum_cnt": "cnt"}
+    ).transform(_pin_lazy)
     woff = Window.orderBy("flag").rowsBetween(
         Window.unboundedPreceding, -1
     )  # |flags| rows — metadata-sized cumulative
@@ -6656,7 +6658,7 @@ def q330(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/windows (parts are ~2·10⁸ keys at 100 TB — the q259
     argument), with the year total as a driver-stats literal instead
     of an all-rows window; the matrix is ≤ 16 cells."""
-    from ..operators.windows import scalable_cumsum
+    from ..operators.windows import scalable_prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
 
@@ -6672,17 +6674,16 @@ def q330(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("cents")
             )
         )
-        # year total = the cumsum kernel's driver-stats grand total as
-        # a literal (total_col) — exact for any sign (sum of the same
+        # year total = the prefix kernel's driver-stats grand total
+        # (totals) — exact for any sign (sum of the same
         # per-partition sums; the r9 max(cum) non-negativity
         # precondition is retired), and the aggregate + 1-row cross
         # join that previously read it are gone (the q259 pattern).
-        cummed = scalable_cumsum(
+        cummed = scalable_prefix_sums(
             rev.withColumn("_neg_cents", -F.col("cents")),
             ("_neg_cents", "part"),
-            "cents",
-            out_col="cum",
-            total_col="tot",
+            {"cum": "cents"},
+            totals={"cum": "tot"},
         ).select("part", F.col("cum").cast("long").alias("cum"), "tot")
         return cummed.select(
             "part",

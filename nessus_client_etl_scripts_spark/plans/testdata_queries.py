@@ -69,10 +69,6 @@ def dsum(col, alias: str, scale: int = 2):
     return F.sum(c.cast(T.DecimalType(18, scale))).cast("double").alias(alias)
 
 
-def _dsum_sql(expr: str, alias: str, scale: int = 2) -> str:
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
-
-
 # ---------------------------------------------------------------------------
 # Flagship + stored-procedure analogues (SURVEY.md §3.3: J1 J2 J3 W1 P7 P8)
 # ---------------------------------------------------------------------------

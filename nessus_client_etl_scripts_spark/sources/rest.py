@@ -44,25 +44,6 @@ ENDPOINTS = {
 }
 
 
-def default_transport(base_url: str, headers: dict[str, str]) -> Transport:
-    """HTTP transport, import-gated: the engine core never requires
-    ``requests`` (this container may not have it)."""
-    try:
-        import requests
-    except ImportError as e:  # pragma: no cover
-        raise NotImplementedError(
-            "HTTP transport needs the 'requests' package; pass a custom "
-            "transport callable instead"
-        ) from e
-
-    def fetch(path: str) -> dict:
-        r = requests.get(base_url + path, headers=headers, timeout=60)
-        r.raise_for_status()
-        return r.json()
-
-    return fetch
-
-
 class NessusRestSource:
     """Typed endpoint wrappers (S2) over an injected transport."""
 

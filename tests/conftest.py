@@ -1,5 +1,6 @@
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -19,6 +20,27 @@ def spark():
         extra_conf={"spark.sql.files.minPartitionNum": "1"},
     )
     yield s
+
+
+@pytest.fixture(scope="session")
+def shuffle_partitions(spark):
+    """``with shuffle_partitions(n):`` — a scoped
+    ``spark.sql.shuffle.partitions``, the range-exchange width the
+    two-phase window operators read when they build. Tests use it to
+    force tie groups and bucket spans across partition boundaries."""
+    from nessus_client_etl_scripts_spark.session import SESSION_CONF_LOCK
+
+    @contextmanager
+    def scoped(n: int):
+        with SESSION_CONF_LOCK:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            try:
+                yield
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    return scoped
 
 
 @pytest.fixture(scope="session")

@@ -82,3 +82,31 @@ def test_drained_pins_do_not_accumulate_blocks_across_queries(spark):
         out.write.format("noop").mode("overwrite").save()
         pins.drain()
     assert _n_persistent(spark) == base
+
+
+class _BrokenPin:
+    """Stands in for a pinned frame whose release raises (a dead JVM
+    or a stopped session)."""
+
+    @property
+    def _jdf(self):
+        raise RuntimeError("session is gone")
+
+
+def test_drain_failure_is_skipped_counted_out_and_logged_once(
+    spark, caplog, monkeypatch
+):
+    pins.drain()
+    monkeypatch.setattr(pins, "_failure_logged", False)
+    with caplog.at_level("WARNING", logger=pins.__name__):
+        pins._registry().append(_BrokenPin())
+        pins.pin_lazy(spark.range(10))
+        # the healthy pin is still released and counted; the broken one
+        # is not, and the registry empties either way
+        assert pins.drain() == 1
+        assert pins.drain() == 0
+        pins._registry().append(_BrokenPin())
+        assert pins.drain() == 0
+    failures = [r for r in caplog.records if "releasing a pin failed" in r.message]
+    assert len(failures) == 1
+    assert "session is gone" in failures[0].exc_text

@@ -140,37 +140,32 @@ def test_compaction_bins_are_contiguous_and_bounded(spark):
 # scalable_running_max — differential vs the single-task window
 # ---------------------------------------------------------------------------
 
-def test_scalable_running_max_differential(spark):
+def test_scalable_running_max_differential(spark, shuffle_partitions):
     rng = random.Random(122)
     rows = [
         (f"g{rng.randrange(3)}", rng.randrange(50), i, rng.randrange(1000))
         for i in range(400)
     ]
     df = spark.createDataFrame(rows, "g string, ord long, key long, v long")
-    for strict in (True, False):
-        got = {
-            (r["g"], r["ord"], r["key"]): r["rm"]
-            for r in scalable_running_max(
-                df,
-                part_col="g",
-                order_cols=("ord", "key"),
-                val_col="v",
-                out_col="rm",
-                strict_preceding=strict,
-                num_partitions=7,
-            ).collect()
-        }
-        end = -1 if strict else Window.currentRow
-        w = (
-            Window.partitionBy("g")
-            .orderBy("ord", "key")
-            .rowsBetween(Window.unboundedPreceding, end)
+    with shuffle_partitions(7):
+        out = scalable_running_max(
+            df,
+            part_col="g",
+            order_cols=("ord", "key"),
+            val_col="v",
+            out_col="rm",
         )
-        ref = {
-            (r["g"], r["ord"], r["key"]): r["rm"]
-            for r in df.withColumn("rm", F.max("v").over(w)).collect()
-        }
-        assert got == ref, f"strict={strict}"
+    got = {(r["g"], r["ord"], r["key"]): r["rm"] for r in out.collect()}
+    w = (
+        Window.partitionBy("g")
+        .orderBy("ord", "key")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    ref = {
+        (r["g"], r["ord"], r["key"]): r["rm"]
+        for r in df.withColumn("rm", F.max("v").over(w)).collect()
+    }
+    assert got == ref
 
 
 def test_scalable_running_max_single_row_groups(spark):
@@ -180,7 +175,7 @@ def test_scalable_running_max_single_row_groups(spark):
     out = {
         r["g"]: r["rm"]
         for r in scalable_running_max(
-            df, "g", ("ord", "key"), "v", out_col="rm", num_partitions=4
+            df, "g", ("ord", "key"), "v", out_col="rm"
         ).collect()
     }
     assert out == {"a": None, "b": None}  # strict: no predecessor

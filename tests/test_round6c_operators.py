@@ -269,11 +269,7 @@ def test_prefix_sums_match_python(spark, vals):
     got = {
         r["rid"]: (r["cum_one"], r["cum_v"])
         for r in scalable_prefix_sums(
-            df,
-            ("k", "rid"),
-            ("v",),
-            derive={"one": F.lit(1).cast("long")},
-            num_partitions=4,
+            df, ("k", "rid"), {"cum_one": F.lit(1), "cum_v": "v"}
         ).collect()
     }
     c1, cv = 0, 0
@@ -479,13 +475,13 @@ def test_gini_bounds_and_uniform_zero(spark):
     # identical y: 2*sum(i*y) = 2*y*n(n+1)/2 = y*n*(n+1) and
     # (n+1)*sum y = (n+1)*n*y -> numerator 0 exactly
     from nessus_client_etl_scripts_spark.operators.windows import (
-        scalable_row_number,
+        scalable_prefix_sums,
     )
 
     df = spark.range(0, 50).select(
         F.lit("g").alias("prio"), F.lit(700).alias("cents"), F.col("id").alias("k")
     )
-    ranked = scalable_row_number(df, ("prio", "cents", "k"), out_col="i")
+    ranked = scalable_prefix_sums(df, ("prio", "cents", "k"), {"i": F.lit(1)})
     mom = ranked.groupBy("prio").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("cents").alias("sy"),

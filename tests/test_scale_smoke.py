@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 N = 3_000_000
 
 
-def test_two_phase_rank_analytic_at_3m(spark):
+def test_two_phase_rank_analytic_at_3m(spark, shuffle_partitions):
     """v = i // 7 gives 7-row tie groups; rank of every row is
     analytically (i // 7) * 7 + 1 and pct_rank = (rank-1)/(n-1).
     Checked via aggregate mismatch counts — zero rows may deviate."""
@@ -33,12 +33,10 @@ def test_two_phase_rank_analytic_at_3m(spark):
         )
         .repartition(48)  # destroy the generation order
     )
-    out = two_phase_rank(
-        df, "g", "v", "k", num_partitions=64, grn_col="pos"
-    )
+    with shuffle_partitions(64):
+        out = two_phase_rank(df, "g", "v", "k")
     bad = out.filter(
         (F.col("rank") != (F.col("k") / 7).cast("long") * 7 + 1)
-        | (F.col("pos") != F.col("k") + 1)
         | (
             F.abs(
                 F.col("pct_rank")
@@ -52,11 +50,11 @@ def test_two_phase_rank_analytic_at_3m(spark):
     assert out.count() == N
 
 
-def test_scalable_cumsum_analytic_at_3m(spark):
+def test_scalable_cumsum_analytic_at_3m(spark, shuffle_partitions):
     """cumsum of the constant weight 2 ordered by id is 2*(id+1) —
     every partition offset must land exactly."""
     from nessus_client_etl_scripts_spark.operators.windows import (
-        scalable_cumsum,
+        scalable_prefix_sums,
     )
 
     df = (
@@ -64,7 +62,8 @@ def test_scalable_cumsum_analytic_at_3m(spark):
         .select(F.col("id").alias("k"), F.lit(2).alias("w"))
         .repartition(48)
     )
-    out = scalable_cumsum(df, ("k",), "w", num_partitions=64)
+    with shuffle_partitions(64):
+        out = scalable_prefix_sums(df, ("k",), {"cumsum": "w"})
     bad = out.filter(F.col("cumsum") != (F.col("k") + 1) * 2).count()
     assert bad == 0
 
@@ -106,15 +105,14 @@ def test_hash_split_proportions_and_determinism_at_2m(spark):
     assert abs(c1["test"] / n - 0.1) < 0.005
 
 
-def test_grouped_row_number_count_col_analytic_at_3m(spark):
+def test_grouped_prefix_sums_totals_analytic_at_3m(spark, shuffle_partitions):
     """1000 groups × 3000 rows: for g = id % 1000 ordered by id, the
     in-group position of row id is id // 1000 + 1 and every row's
-    count_col is exactly 3000 — exercises the r10 single-source-counts
-    path (group sizes off the same checkpointed stage as the
-    positions, the group_median feed) across dozens of range
-    partitions."""
+    group total is exactly 3000 — exercises the single-source-counts
+    path (group sizes off the same stats fold as the positions, the
+    group_median feed) across dozens of range partitions."""
     from nessus_client_etl_scripts_spark.operators.windows import (
-        grouped_row_number,
+        scalable_prefix_sums,
     )
 
     groups = 1000
@@ -126,9 +124,10 @@ def test_grouped_row_number_count_col_analytic_at_3m(spark):
         )
         .repartition(48)
     )
-    out = grouped_row_number(
-        df, "g", ("k",), out_col="rn", num_partitions=64, count_col="n"
-    )
+    with shuffle_partitions(64):
+        out = scalable_prefix_sums(
+            df, ("k",), {"rn": F.lit(1)}, part_col="g", totals={"rn": "n"}
+        )
     bad = out.filter(
         (F.col("rn") != (F.col("k") / groups).cast("long") + 1)
         | (F.col("n") != F.lit(N // groups))
@@ -136,7 +135,7 @@ def test_grouped_row_number_count_col_analytic_at_3m(spark):
     assert bad == 0
 
 
-def test_scalable_ntile_analytic_at_3m(spark):
+def test_scalable_ntile_analytic_at_3m(spark, shuffle_partitions):
     """ntile(7) over 3M rows ordered by id: N % 7 = 3000000 % 7 = 6
     oversized buckets of q+1 rows lead, the rest hold q — the
     closed-form tile of row id must match the ANSI rule exactly at
@@ -149,7 +148,8 @@ def test_scalable_ntile_analytic_at_3m(spark):
     b = 7
     q, r = divmod(N, b)
     df = spark.range(N).select(F.col("id").alias("k")).repartition(48)
-    out = scalable_ntile(df, ("k",), b, out_col="t", num_partitions=64)
+    with shuffle_partitions(64):
+        out = scalable_ntile(df, ("k",), b, out_col="t")
     # analytic tile of 0-based position p = k (unique order key)
     expected = F.when(
         F.col("k") < r * (q + 1), (F.col("k") / (q + 1)).cast("long") + 1
