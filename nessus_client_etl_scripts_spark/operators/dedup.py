@@ -292,28 +292,30 @@ def minhash_lsh_candidates(
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k, family)
     if materialize_signatures:
         sig = sig.persist()
-    banded = _banded_frame(sig, num_hashes, bands, family)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    out = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
+    try:
+        banded = _banded_frame(sig, num_hashes, bands, family)
+        left = banded.alias("l")
+        right = banded.alias("r")
+        out = (
+            left.join(
+                right,
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bucket") == F.col("r.bucket"))
+                & (F.col("l.doc_id") < F.col("r.doc_id")),
+            )
+            .select(
+                F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
+            )
+            .distinct()
         )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    if materialize_signatures:
-        # eager: run the candidate job now (signature stage executes
-        # once via the cache), then release the cache — no session-
+        # eager when materializing: run the candidate job now (the
+        # signature stage executes once via the cache); the cache is
+        # released below, also when the job raises — no session-
         # lifetime leak across repeated invocations
-        out = out.transform(_pin)
-        sig.unpersist()
-    return out
+        return out.transform(_pin) if materialize_signatures else out
+    finally:
+        if materialize_signatures:
+            sig.unpersist()
 
 
 def simhash64(
@@ -1061,45 +1063,46 @@ def minhash_estimate_pairs(
     sig = minhash_signatures(
         df, text_col, id_col, num_hashes, k, family
     ).persist()
-    banded = _banded_frame(sig, num_hashes, bands, family)
-    cand = (
-        banded.alias("l")
-        .join(
-            banded.alias("r"),
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(
-            F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
-    sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
-    sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
-    est = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(
-                F.filter(
-                    F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
-                    lambda m: m,
-                )
+    try:
+        banded = _banded_frame(sig, num_hashes, bands, family)
+        cand = (
+            banded.alias("l")
+            .join(
+                banded.alias("r"),
+                (F.col("l.band") == F.col("r.band"))
+                & (F.col("l.bucket") == F.col("r.bucket"))
+                & (F.col("l.doc_id") < F.col("r.doc_id")),
             )
-            .cast("long")
-            .alias("est_matches"),
+            .select(
+                F.col("l.doc_id").alias("doc_a"), F.col("r.doc_id").alias("doc_b")
+            )
+            .distinct()
         )
-        .withColumn(
-            "est_jaccard",
-            F.col("est_matches").cast("double") / F.lit(float(num_hashes)),
+        sa = sig.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("_sa"))
+        sb = sig.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("_sb"))
+        est = (
+            cand.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                F.size(
+                    F.filter(
+                        F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
+                        lambda m: m,
+                    )
+                )
+                .cast("long")
+                .alias("est_matches"),
+            )
+            .withColumn(
+                "est_jaccard",
+                F.col("est_matches").cast("double") / F.lit(float(num_hashes)),
+            )
         )
-    )
-    out = est.transform(_pin)
-    sig.unpersist()
-    return out
+        return est.transform(_pin)
+    finally:
+        sig.unpersist()
 
 
 def prefix_filter_pairs(

@@ -283,39 +283,41 @@ def _cc_propagation(
         .distinct()
         .persist()
     )
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .transform(_pin)
-    )
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
-        # neighbor messages: each edge forwards the source's current
-        # label to the destination; min with own label per vertex
-        msgs = sym.join(
-            labels.withColumnRenamed("id", "a"), "a"
-        ).select(F.col("b").alias("id"), "label")
-        # eager localCheckpoint: materializes AND truncates lineage to a
-        # LogicalRDD, keeping every round's analysis cost constant
-        new_labels = (
-            labels.union(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
+    try:
+        labels = (
+            sym.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id"))
             .transform(_pin)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
+        rounds = 0
+        for _ in range(max_iter):
+            rounds += 1
+            # neighbor messages: each edge forwards the source's current
+            # label to the destination; min with own label per vertex
+            msgs = sym.join(
+                labels.withColumnRenamed("id", "a"), "a"
+            ).select(F.col("b").alias("id"), "label")
+            # eager localCheckpoint: materializes AND truncates lineage to a
+            # LogicalRDD, keeping every round's analysis cost constant
+            new_labels = (
+                labels.union(msgs)
+                .groupBy("id")
+                .agg(F.min("label").alias("label"))
+                .transform(_pin)
+            )
+            changed = (
+                new_labels.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .limit(1)
+                .count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+    finally:
+        sym.unpersist()
     return labels.select("id", F.col("label").alias("cluster_id")), rounds
 
 

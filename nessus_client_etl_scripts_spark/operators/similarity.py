@@ -1,12 +1,23 @@
 """Similarity search over embedding columns (SURVEY.md §7 Phase 4).
 
-Two tiers:
-- Brute-force cosine top-k — the exact baseline. Query side broadcast,
-  corpus side streamed: no shuffle of the corpus at all, so it scales
-  to any corpus size as long as the query set stays broadcast-able.
-- LSH-bucketed (random hyperplane / SimHash-for-vectors) — the scale
-  path: sign-bit sketch → bucket equi-join, probing only same-bucket
-  corpus vectors. Trades recall for a candidate set ~1/2^bits the size.
+Six vector top-k operators share ONE path — stage both sides as
+``(id, double vector, norm)`` (:func:`_stage`), generate candidate
+pairs, score them, rank per query (:func:`_top_k` on
+``windows.top_k_per_group``). Only the candidate step differs:
+
+- :func:`brute_force_topk` — every corpus row (the exact baseline);
+- :func:`lsh_topk` — hyperplane-bucket equi-join, optionally
+  multi-probe;
+- :func:`codebook_ivf_topk` — the query's nprobe nearest cells of a
+  fixed codebook (Arrow-matmul assignment, literal twin for tests);
+- :func:`ivf_exact_topk` — the same over a quantized codebook from
+  :func:`kmeans_exact_quantized`;
+- :func:`pq_adc_topk` / :func:`ivfpq_topk` — every row / the probed
+  cells, scored by PQ asymmetric distance over codes.
+
+In every one the query side is broadcast and the corpus side streams.
+Also here: :func:`semantic_dedup`, :func:`kcenter_greedy`,
+:func:`embedding_standardize_checksum` and the sketch primitives.
 
 All vector math is within-row array algebra on ``array<float>`` cast to
 double (zip_with product + left-fold sum — sequential, deterministic,
@@ -17,9 +28,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..pins import pin as _pin, pin_lazy as _pin_lazy
+from .windows import top_k_per_group
 
 
 # Hard ceiling on rows a kernel may pull to the driver to build a
@@ -46,7 +58,8 @@ def collect_bounded_side(df: DataFrame, max_rows: int = MAX_DRIVER_SIDE_ROWS):
         raise ValueError(
             f"side table exceeds the {max_rows}-row driver-collect bound; "
             "feed per-bucket slices (LSH bands / IVF cells, see "
-            "multiprobe_buckets / ivf_topk) instead of the full corpus"
+            "multiprobe_buckets / codebook_ivf_topk) instead of the full "
+            "corpus"
         )
     return rows
 
@@ -93,14 +106,49 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+# ---------------------------------------------------------------------------
+# The shared top-k path: stage → candidates → score → rank
+# ---------------------------------------------------------------------------
+
+_SIDES = {"query": ("query_id", "qv", "_qn"), "corpus": ("neighbor_id", "cv", "_cn")}
+
+
+def _stage(df: DataFrame, side: str, id_col: str, vec_col: str) -> DataFrame:
+    """One side of a top-k search as ``(id, double vector, norm)``:
+    ``(query_id, qv, _qn)`` for ``side="query"``, ``(neighbor_id, cv,
+    _cn)`` for ``side="corpus"``.
+
+    Norms are computed PER ROW before any candidate join (|C| + |Q|
+    norm folds instead of |C| x |Q|), so each candidate pair costs one
+    cross dot product. The values are bit-identical to folding both
+    norms inline (same IEEE ops in the same order: sqrt, sqrt,
+    multiply, divide). Tiers that never read the norm (PQ) lose it to
+    column pruning."""
+    id_out, v, n = _SIDES[side]
+    return df.select(
+        F.col(id_col).alias(id_out), _as_double(vec_col).alias(v)
+    ).withColumn(n, l2_norm(F.col(v)))
+
+
+def _cosine_score() -> Column:
+    """Cosine of a staged (query, corpus) pair: one cross-dot fold."""
+    return (dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))).alias(
+        "score"
     )
+
+
+def _top_k(pairs: DataFrame, score: Column, order: Column, k: int) -> DataFrame:
+    """Score candidate ``pairs`` and keep each query's ``k`` best.
+
+    Self pairs are dropped, ``score`` is evaluated per remaining pair,
+    and the rank is ``order`` then the lower ``neighbor_id`` (a total
+    order, so ranks are deterministic). Output ``(query_id,
+    neighbor_id, <score>, rank)`` with a bigint rank. The rank window
+    shuffles only these triples, never the vectors."""
+    scored = pairs.filter(F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", score
+    )
+    return top_k_per_group(scored, ["query_id"], [order, F.asc("neighbor_id")], k)
 
 
 def brute_force_topk(
@@ -109,48 +157,18 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    metric: str = "cosine",
 ) -> DataFrame:
-    """Exact top-k: broadcast the query set against the corpus and rank
-    per query. Output: (query_id, neighbor_id, score, rank).
+    """Exact cosine top-k: broadcast the query set against the corpus
+    and rank per query. Output: (query_id, neighbor_id, score, rank).
 
     The corpus never shuffles — each task scans its partition once per
-    plan, scoring |queries| vectors per row. The per-query rank window
-    shuffles only (query_id, neighbor_id, score) triples.
-
-    Cosine norms are precomputed PER ROW before the join (|C| + |Q|
-    norm folds instead of |C| x |Q|): per candidate pair only the
-    cross dot product remains — the per-pair fold count drops 3x. The
-    values are bit-identical to folding both norms inline (same IEEE
-    ops in the same order: sqrt, sqrt, multiply, divide), so the
-    oracle hash is unchanged.
+    plan, scoring |queries| vectors per row.
     """
     from ..catalog import spread_for_compute
 
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    )
-    c = spread_for_compute(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    )
-    if metric == "cosine":
-        q = q.withColumn("_qn", l2_norm(F.col("qv")))
-        c = c.withColumn("_cn", l2_norm(F.col("cv")))
-        score = dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
-    else:
-        score = -l2_distance(F.col("qv"), F.col("cv"))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    q = _stage(queries, "query", id_col, vec_col)
+    c = _stage(spread_for_compute(corpus), "corpus", id_col, vec_col)
+    return _top_k(c.join(F.broadcast(q)), _cosine_score(), F.desc("score"), k)
 
 
 def _hyperplanes(bits: int, dim: int, seed: int = 0x5EED) -> list[list[float]]:
@@ -257,73 +275,35 @@ def lsh_topk(
     (multi-probe LSH) — the standard recall lever when 2^bits buckets
     over-prune, at (1 + probes)× the candidate volume. Corpus vectors
     still index into exactly ONE bucket, so the corpus-side layout (and
-    a persisted corpus index) is probe-count-independent."""
+    a persisted corpus index) is probe-count-independent. ``probes=0``
+    explodes just ``[bucket]`` (the flip slice is empty)."""
     from ..catalog import spread_for_compute
 
-    # stage the double-cast vector first; the sketch reads the staged
-    # attribute so the cast-transform runs once, not per bit×component
-    # per-row norms computed once before the bucket join (not per
-    # candidate pair) — see brute_force_topk; values bit-identical
-    q_staged = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("_qn", l2_norm(F.col("qv")))
-    if probes > 0:
-        q = (
-            q_staged.select(
-                "query_id", "qv", "_qn", _bit_dots(F.col("qv"), bits).alias("dots")
-            )
-            .select(
-                "query_id",
-                "qv",
-                "_qn",
-                "dots",
-                _bucket_from_dots(F.col("dots")).alias("b0"),
-            )
-            .select(
-                "query_id",
-                "qv",
-                "_qn",
-                F.explode(
-                    multiprobe_buckets(F.col("dots"), F.col("b0"), probes)
-                ).alias("bucket"),
-            )
+    # the sketch reads the staged double vector, so the cast-transform
+    # runs once, not per bit×component
+    q = (
+        _stage(queries, "query", id_col, vec_col)
+        .select("query_id", "qv", "_qn", _bit_dots(F.col("qv"), bits).alias("dots"))
+        .select(
+            "query_id", "qv", "_qn", "dots", _bucket_from_dots(F.col("dots")).alias("b0")
         )
-    else:
-        q = q_staged.select(
-            "query_id", "qv", "_qn",
-            hyperplane_sketch(F.col("qv"), bits).alias("bucket"),
-        )
-    c = spread_for_compute(corpus).select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).select(
-        "neighbor_id",
-        "cv",
-        l2_norm(F.col("cv")).alias("_cn"),
-        hyperplane_sketch(F.col("cv"), bits).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
-            ).alias("score"),
+            "qv",
+            "_qn",
+            F.explode(multiprobe_buckets(F.col("dots"), F.col("b0"), probes)).alias(
+                "bucket"
+            ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
+    c = _stage(spread_for_compute(corpus), "corpus", id_col, vec_col).withColumn(
+        "bucket", hyperplane_sketch(F.col("cv"), bits)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(c.join(F.broadcast(q), "bucket"), _cosine_score(), F.desc("score"), k)
 
 
 # ---------------------------------------------------------------------------
-# IVF (inverted-file) ANN — coarse k-means quantizer + probed search
+# IVF (inverted-file) ANN — coarse codebook cells + probed search
 # ---------------------------------------------------------------------------
 
 
@@ -359,134 +339,64 @@ def _probe_udf(cents: list[list[float]], nprobe: int):
     return probe
 
 
-def _kmeans_py(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Deterministic Lloyd iterations → driver-side centroid list.
+def _codebook_cells_expr(centroids: list[list[float]]) -> Column:
+    """The codebook as ONE SQL-parsed literal ``array<struct<c,c2,ci>>``
+    (a single ``F.expr`` round-trip — building k×dim literals through
+    the Python Column API costs ~0.5 s of py4j chatter per plan, and k
+    separate fold expressions make Catalyst resolve k×dim nested lambda
+    scopes).
 
-    - init: the n_centroids rows with the smallest xxhash64(id) — a
-      deterministic pseudo-random sample, no driver-side RNG state;
-    - assign: per-row vectorized argmin (_probe_udf — narrow, no
-      shuffle, one matmul per Arrow batch);
-    - update: element-wise mean via posexplode → groupBy(centroid,
-      dim) → avg. At 100 TB the shuffle carries (centroid, dim,
-      partial sum/count) — dim×k cells per map partition, independent
-      of corpus size.
-
-    Centroids live on the driver between iterations (k×dim doubles —
-    bytes at any corpus scale; the same state-handling as spark.ml's
-    KMeans). Keeping them lazy instead would embed every previous
-    iteration's lineage into the next plan and re-execute the whole
-    history each time the centroid table is referenced.
-    """
-    # deliberately NOT spread_for_compute'd: the per-iteration work is
-    # an Arrow-batched matmul (bandwidth-bound), and the persist below
-    # already amortizes the scan — a repartition shuffle of the raw
-    # vectors costs more than the extra task parallelism returns
-    # (measured on q39: spread here + at the assignment scan took the
-    # query 2.7 s → 7.7 s at sf0.1)
-    v = corpus.select(
-        F.col(id_col).alias("_vid"), _as_double(vec_col).alias("v")
-    ).persist()  # scanned iters+1 times; same caching spark.ml KMeans does
-    init = (
-        v.withColumn("_h", F.xxhash64("_vid"))
-        .orderBy("_h", "_vid")
-        .limit(n_centroids)
-        .select("v")
-        .collect()
-    )
-    cents = [list(r["v"]) for r in init]
-    for _ in range(iters):
-        # assignment staged BEFORE the generator (same staging rule as
-        # the lambda-body materialization in dedup.py)
-        assigned = v.select(
-            F.element_at(_probe_udf(cents, 1)("v"), 1).alias("centroid_id"),
-            "v",
-        ).select("centroid_id", F.posexplode("v").alias("dim", "x"))
-        rows = (
-            assigned.groupBy("centroid_id", "dim")
-            .agg(F.avg("x").alias("m"))
-            .collect()
+    ``repr(x)`` emits the shortest round-trip decimal and Spark's
+    ``D``-suffixed literal parses it back to the identical double; c2
+    is the driver-side sequential Σc² (the q79-proven pairing)."""
+    items = []
+    for j, cent in enumerate(centroids):
+        c2 = sum(x * x for x in cent)
+        arr = ",".join(f"{x!r}D" for x in cent)
+        items.append(
+            f"named_struct('c', array({arr}), 'c2', {float(c2)!r}D, 'ci', {j})"
         )
-        by_cent: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cent.setdefault(r["centroid_id"], {})[r["dim"]] = r["m"]
-        # empty clusters keep their previous centroid
-        cents = [
-            [by_cent[i][d] for d in range(len(cents[i]))]
-            if i in by_cent
-            else cents[i]
-            for i in range(len(cents))
-        ]
-    v.unpersist()
-    return cents
+    return F.expr("array(" + ",".join(items) + ")")
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: corpus vectors are bucketed under their
-    nearest coarse centroid (the inverted file); each query probes its
-    nprobe nearest centroids and scores exact cosine only within those
-    buckets. nprobe = n_centroids degrades gracefully to brute force
-    (the recall/test anchor); small nprobe prunes the candidate space
-    to ~nprobe/n_centroids of the corpus.
-    """
-    cents = _kmeans_py(corpus, n_centroids, iters, id_col, vec_col)
-    # deliberately NOT spread: the Arrow-batched matmul assignment is
-    # memory-bandwidth-bound, so a full-row repartition of the corpus
-    # costs more than the extra parallelism returns (measured +60% on
-    # q39); the kmeans path spreads because its shuffle amortizes over
-    # the persisted iterations
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("_cn", l2_norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("_qn", l2_norm(F.col("qv")))
-    c_assign = c.select(
-        "neighbor_id",
-        F.element_at(_probe_udf(cents, 1)("cv"), 1).alias("centroid_id"),
-    )
-    q_probe = q.select(
-        "query_id",
-        F.explode(_probe_udf(cents, nprobe)("qv")).alias("centroid_id"),
-    )
-    candidates = (
-        c_assign.join(q_probe, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    # per-row norms ride the (id, vec) projections; each candidate
-    # pair costs one cross-dot fold, not three (see brute_force_topk)
-    scored = (
-        candidates.join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
-            ).alias("score"),
+def _cell_dist(v: Column, cell: Column) -> Column:
+    """Expanded squared distance ``-2·(v·c) + c·c`` to one codebook
+    struct (the ``v·v`` term is constant per row). The fold inside
+    ``dot`` is the same IEEE sequence as DuckDB's ``list_dot_product``."""
+    return F.lit(-2.0) * dot(v, cell["c"]) + cell["c2"]
+
+
+def _cell_ranking_expr(centroids: list[list[float]], vec_attr: str) -> Column:
+    """array_sort of (d, i) structs ranking every centroid by
+    :func:`_cell_dist` — the engine-exact cell ranking, built for BOTH
+    low plan-compile cost and zero shuffle:
+
+    - the codebook ships as one literal (:func:`_codebook_cells_expr`);
+    - ONE transform lambda computes all k distances per row, so lambda
+      count is constant in k and assignment needs no join and no
+      shuffle (the corpus never moves — same posture as q79's arrow
+      path, which remains the many-thousand-cell tier).
+
+    Ties rank on the lower ci, matching ``row_number() OVER (ORDER BY
+    d, ci)``. The plan still grows O(k×dim) with the codebook: this
+    is the oracle-exact tier for codebooks of hundreds of cells.
+
+    NB: the lambda must stay single-parameter — a two-parameter lambda
+    makes Spark's transform() bind (element, index)."""
+    v = F.col(vec_attr)
+    return F.array_sort(
+        F.transform(
+            _codebook_cells_expr(centroids),
+            lambda s: F.struct(_cell_dist(v, s).alias("d"), s["ci"].alias("i")),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+
+
+def _nearest_cells(centroids: list[list[float]], vec_attr: str, n: int) -> Column:
+    """array<int> of the ``n`` nearest cells under
+    :func:`_cell_ranking_expr` — a query's probe list."""
+    return F.transform(
+        F.slice(_cell_ranking_expr(centroids, vec_attr), 1, n), lambda s: s["i"]
     )
 
 
@@ -512,12 +422,11 @@ def codebook_ivf_topk(
       matmul (:func:`_probe_udf`). The plan size is CONSTANT in the
       codebook size — a thousands-of-cells codebook (the ~√N sizing a
       100 TB IVF index wants) plans exactly like a 16-cell one.
-    - ``"literal"`` (oracle twin, small codebooks only): per-centroid
-      sequential-fold dot products inlined as column expressions with
-      an ``array_sort`` over (distance, index) structs. Every
-      arithmetic step has an exact DuckDB twin, but the expression
-      tree grows O(|cells| × dim) — it exists to value-anchor the
-      arrow path in tests, not to serve queries.
+    - ``"literal"`` (oracle twin, small codebooks only): the
+      within-row literal-codebook ranking (:func:`_cell_ranking_expr`).
+      Every arithmetic step has an exact DuckDB twin, but the
+      expression tree grows O(|cells| × dim) — it exists to
+      value-anchor the arrow path in tests, not to serve queries.
 
     Both paths rank cells by expanded squared distance
     ``-2·(v·c) + c·c`` (the ``v·v`` term is constant per row) with
@@ -531,106 +440,23 @@ def codebook_ivf_topk(
     cells. The probe side is broadcast — queries never shuffle the
     corpus.
     """
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-    ).withColumn("_cn", l2_norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-    ).withColumn("_qn", l2_norm(F.col("qv")))
     if assignment == "arrow":
-        c_assign = c.select(
-            "neighbor_id",
-            "cv",
-            "_cn",
-            F.element_at(_probe_udf(centroids, 1)("cv"), 1).alias("cell"),
-        )
-        q_probe = q.select(
-            "query_id",
-            "qv",
-            "_qn",
-            F.explode(_probe_udf(centroids, nprobe)("qv")).alias("cell"),
-        )
+        cell = F.element_at(_probe_udf(centroids, 1)("cv"), 1)
+        probes = _probe_udf(centroids, nprobe)("qv")
     elif assignment == "literal":
-        cell_ranking = _literal_cell_ranking(centroids)
-        c_assign = c.select(
-            "neighbor_id",
-            "cv",
-            "_cn",
-            cell_ranking(F.col("cv"))[0]["i"].alias("cell"),
-        )
-        q_probe = q.select(
-            "query_id",
-            "qv",
-            "_qn",
-            F.explode(
-                F.transform(
-                    F.slice(cell_ranking(F.col("qv")), 1, nprobe),
-                    lambda s: s["i"],
-                )
-            ).alias("cell"),
-        )
+        cell = _cell_ranking_expr(centroids, "cv")[0]["i"]
+        probes = _nearest_cells(centroids, "qv", nprobe)
     else:  # pragma: no cover - guard
         raise ValueError(f"assignment must be 'arrow' or 'literal': {assignment}")
-    # per-pair cost: one cross-dot fold (norms precomputed per row)
-    scored = (
-        c_assign.join(F.broadcast(q_probe), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def _cell_ranking_expr(centroids: list[list[float]], vec_attr: str) -> Column:
-    """array_sort of (d, i) structs ranking every centroid by
-    ``-2·(v·c) + c·c`` — the engine-exact cell ranking, built for BOTH
-    low plan-compile cost and zero shuffle:
-
-    - the codebook ships as ONE SQL-parsed literal
-      ``array<struct<c,c2,ci>>`` (a single ``F.expr`` round-trip —
-      building k×dim literals through the Python Column API costs
-      ~0.5 s of py4j chatter per plan, and k separate fold expressions
-      make Catalyst resolve k×dim nested lambda scopes);
-    - ONE transform lambda computes all k distances per row, so lambda
-      count is constant in k and assignment needs no join and no
-      shuffle (the corpus never moves — same posture as q79's arrow
-      path, which remains the many-thousand-cell tier).
-
-    ``repr(x)`` emits the shortest round-trip decimal and Spark's
-    ``D``-suffixed literal parses it back to the identical double; the
-    fold inside ``dot`` is the same IEEE sequence as DuckDB's
-    ``list_dot_product``, and c2 is the driver-side sequential Σc²
-    (the q79-proven pairing). Ties rank on the lower ci, matching
-    ``row_number() OVER (ORDER BY d, ci)``."""
-    items = []
-    for j, cent in enumerate(centroids):
-        c2 = sum(x * x for x in cent)
-        arr = ",".join(f"{x!r}D" for x in cent)
-        items.append(
-            f"named_struct('c', array({arr}), 'c2', {float(c2)!r}D, 'ci', {j})"
-        )
-    cells = F.expr("array(" + ",".join(items) + ")")
-    v = F.col(vec_attr)
-    return F.array_sort(
-        F.transform(
-            cells,
-            lambda s: F.struct(
-                (F.lit(-2.0) * dot(v, s["c"]) + s["c2"]).alias("d"),
-                s["ci"].alias("i"),
-            ),
-        )
-    )
+    # deliberately NOT spread_for_compute'd (unlike brute force and
+    # LSH): the Arrow-batched matmul assignment is memory-bandwidth-
+    # bound, so a full-row repartition of the corpus costs more than
+    # the extra parallelism returns — measured +60 % on q39, and
+    # 2.7 s → 7.7 s at sf0.1 with a spread at both its k-means trainer
+    # and its assignment scan. The other IVF tiers follow suit.
+    c = _stage(corpus, "corpus", id_col, vec_col).withColumn("cell", cell)
+    q = _stage(queries, "query", id_col, vec_col).withColumn("cell", F.explode(probes))
+    return _top_k(c.join(F.broadcast(q), "cell"), _cosine_score(), F.desc("score"), k)
 
 
 def _quantize_long(vec: Column, scale: float) -> Column:
@@ -676,10 +502,11 @@ def kmeans_exact_quantized(
       previous centroid.
 
     Centroids live on the driver between iterations (k×dim doubles —
-    same state posture as spark.ml KMeans and :func:`_kmeans_py`); the
-    literal-expression assignment bounds this variant to codebooks of
-    hundreds of cells (plan grows O(k×dim)) — the arrow-matmul trainer
-    (:func:`_kmeans_py`) is the many-thousand-cell path.
+    the same state posture as spark.ml KMeans: keeping them lazy would
+    embed every previous iteration's lineage into the next plan). The
+    literal-expression assignment bounds this trainer to codebooks of
+    hundreds of cells (plan grows O(k×dim)); the quantized vectors are
+    persisted for the call and released even when it raises.
     """
     v = (
         corpus.select(
@@ -689,48 +516,50 @@ def kmeans_exact_quantized(
         .withColumn("vqd", _as_double(F.col("vq")))
         .persist()  # scanned iters+1 times
     )
-    init = (
-        v.withColumn(
-            "_h",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("ivf:"), F.col("_vid").cast("string"))),
-                    1,
-                    12,
-                ),
-                16,
-                10,
-            ).cast("long"),
-        )
-        .orderBy("_h", "_vid")
-        .limit(n_centroids)
-        .select("vqd")
-        .collect()
-    )
-    cents = [list(r["vqd"]) for r in init]
-    dim = len(cents[0])
-    for _ in range(iters):
-        assigned = v.select(
-            _cell_ranking_expr(cents, "vqd")[0]["i"].alias("ci"), "vq"
-        )
-        # update: per-(cell, dim) exact long sums + counts; mean = ONE
-        # correctly-rounded long/long division, matching the oracle's
-        # CAST(SUM(vq[i]) AS DOUBLE)/COUNT(*) bit for bit. The shuffle
-        # carries k×dim partial cells per map partition.
-        rows = (
-            assigned.select("ci", F.posexplode("vq").alias("dim", "x"))
-            .groupBy("ci", "dim")
-            .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+    try:
+        init = (
+            v.withColumn(
+                "_h",
+                F.conv(
+                    F.substring(
+                        F.md5(F.concat(F.lit("ivf:"), F.col("_vid").cast("string"))),
+                        1,
+                        12,
+                    ),
+                    16,
+                    10,
+                ).cast("long"),
+            )
+            .orderBy("_h", "_vid")
+            .limit(n_centroids)
+            .select("vqd")
             .collect()
         )
-        by_cent: dict[int, dict[int, float]] = {}
-        for r in rows:
-            by_cent.setdefault(r["ci"], {})[r["dim"]] = r["s"] / r["n"]
-        cents = [
-            [by_cent[i][d] for d in range(dim)] if i in by_cent else cents[i]
-            for i in range(len(cents))
-        ]
-    v.unpersist()
+        cents = [list(r["vqd"]) for r in init]
+        dim = len(cents[0])
+        for _ in range(iters):
+            assigned = v.select(
+                _cell_ranking_expr(cents, "vqd")[0]["i"].alias("ci"), "vq"
+            )
+            # update: per-(cell, dim) exact long sums + counts; mean = ONE
+            # correctly-rounded long/long division, matching the oracle's
+            # CAST(SUM(vq[i]) AS DOUBLE)/COUNT(*) bit for bit. The shuffle
+            # carries k×dim partial cells per map partition.
+            rows = (
+                assigned.select("ci", F.posexplode("vq").alias("dim", "x"))
+                .groupBy("ci", "dim")
+                .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
+                .collect()
+            )
+            by_cent: dict[int, dict[int, float]] = {}
+            for r in rows:
+                by_cent.setdefault(r["ci"], {})[r["dim"]] = r["s"] / r["n"]
+            cents = [
+                [by_cent[i][d] for d in range(dim)] if i in by_cent else cents[i]
+                for i in range(len(cents))
+            ]
+    finally:
+        v.unpersist()
     return cents
 
 
@@ -748,15 +577,11 @@ def ivf_exact_topk(
     cells assigned on the QUANTIZED vectors (the space the codebook was
     trained in — literal fold ranking, value-exact cross-engine),
     candidates scored with exact sequential-fold cosine on the ORIGINAL
-    doubles. Same probe/score/rank shape as :func:`codebook_ivf_topk`;
-    per-row norms precomputed before the cell join; cell assignment is
-    the within-row literal-codebook ranking (:func:`_cell_ranking_expr`)
-    — the corpus never shuffles for assignment."""
+    doubles. Same probe/score/rank shape as :func:`codebook_ivf_topk`,
+    with its literal assignment — the corpus never shuffles for
+    assignment."""
     c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("cv")
-        )
-        .withColumn("_cn", l2_norm(F.col("cv")))
+        _stage(corpus, "corpus", id_col, vec_col)
         .withColumn("vqd", _as_double(_quantize_long(F.col("cv"), scale)))
         .select(
             "neighbor_id",
@@ -766,69 +591,16 @@ def ivf_exact_topk(
         )
     )
     q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("qv")
-        )
-        .withColumn("_qn", l2_norm(F.col("qv")))
+        _stage(queries, "query", id_col, vec_col)
         .withColumn("vqd", _as_double(_quantize_long(F.col("qv"), scale)))
         .select(
             "query_id",
             "qv",
             "_qn",
-            F.explode(
-                F.transform(
-                    F.slice(_cell_ranking_expr(centroids, "vqd"), 1, nprobe),
-                    lambda s: s["i"],
-                )
-            ).alias("cell"),
+            F.explode(_nearest_cells(centroids, "vqd", nprobe)).alias("cell"),
         )
     )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                dot(F.col("qv"), F.col("cv")) / (F.col("_qn") * F.col("_cn"))
-            ).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
-
-
-def _literal_cell_ranking(centroids: list[list[float]]):
-    """Column-expression cell ranking for the oracle twin: (distance,
-    index) structs sorted ascending — total order, index tie-break.
-    O(|cells| × dim) expression nodes; keep codebooks small here."""
-    c2 = [
-        sum(x * x for x in cent)  # exact python double sum, driver-side
-        for cent in centroids
-    ]
-
-    def cell_ranking(v: Column) -> Column:
-        pairs = F.array(
-            *[
-                F.struct(
-                    (
-                        F.lit(-2.0) * dot(v, F.array(*[F.lit(x) for x in cent]))
-                        + F.lit(float(norm2))
-                    ).alias("d"),
-                    F.lit(i).alias("i"),
-                )
-                for i, (cent, norm2) in enumerate(zip(centroids, c2))
-            ]
-        )
-        return F.array_sort(pairs)
-
-    return cell_ranking
+    return _top_k(c.join(F.broadcast(q), "cell"), _cosine_score(), F.desc("score"), k)
 
 
 def semantic_dedup(
@@ -870,55 +642,57 @@ def semantic_dedup(
         )
         .persist()
     )
+    try:
+        # Per-cell blocked matmul instead of a cell self-join with a
+        # per-pair sequential fold (measured 3.4 s → ~1.5 s at sf0.1 for
+        # q114). Reordering the dot's summation moves the cosine by
+        # O(dim) ulps (~1e-14 relative); the corpus's minimum |cos − τ|
+        # boundary margin is 3.4e-5 at sf0.1 (2.7e-3 at sf0.01) — eleven
+        # orders of magnitude wider, so the verdict cannot flip vs the
+        # oracle's sequential list_dot_product (pinned by
+        # test_semantic_dedup_threshold_margin). 1024-row slabs bound a
+        # hot cell's in-memory pair block.
+        thr = float(threshold)
 
-    # Per-cell blocked matmul instead of a cell self-join with a
-    # per-pair sequential fold (measured 3.4 s → ~1.5 s at sf0.1 for
-    # q114). Reordering the dot's summation moves the cosine by
-    # O(dim) ulps (~1e-14 relative); the corpus's minimum |cos − τ|
-    # boundary margin is 3.4e-5 at sf0.1 (2.7e-3 at sf0.01) — eleven
-    # orders of magnitude wider, so the verdict cannot flip vs the
-    # oracle's sequential list_dot_product (pinned by
-    # test_semantic_dedup_threshold_margin). 1024-row slabs bound a
-    # hot cell's in-memory pair block.
-    thr = float(threshold)
+        def cell_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
+            if len(pdf) < 2:
+                return pd.DataFrame({"vec_id": []}, dtype="int64")
+            order = np.argsort(pdf["vec_id"].to_numpy())
+            ids = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
+            M = np.stack(pdf["v"].to_numpy()[order]).astype(
+                np.float64, copy=False
+            )
+            nn = pdf["_n"].to_numpy(dtype=np.float64)[order]
+            n_rows = len(ids)
+            hit = np.zeros(n_rows, dtype=bool)
+            for lo_i in range(0, n_rows, 1024):
+                hi_i = min(lo_i + 1024, n_rows)
+                cos = (M[lo_i:hi_i] @ M.T) / (nn[lo_i:hi_i, None] * nn[None, :])
+                ii, jj = np.nonzero(cos >= thr)
+                keep = (ii + lo_i) < jj  # smaller-id neighbor drops the larger
+                hit[jj[keep]] = True
+            return pd.DataFrame({"vec_id": ids[hit]})
 
-    def cell_dropped(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"vec_id": []}, dtype="int64")
-        order = np.argsort(pdf["vec_id"].to_numpy())
-        ids = pdf["vec_id"].to_numpy(dtype=np.int64)[order]
-        M = np.stack(pdf["v"].to_numpy()[order]).astype(
-            np.float64, copy=False
+        dropped = (
+            assigned.groupBy("cell")
+            .applyInPandas(cell_dropped, schema="vec_id long")
+            .transform(_pin)
         )
-        nn = pdf["_n"].to_numpy(dtype=np.float64)[order]
-        n_rows = len(ids)
-        hit = np.zeros(n_rows, dtype=bool)
-        for lo_i in range(0, n_rows, 1024):
-            hi_i = min(lo_i + 1024, n_rows)
-            cos = (M[lo_i:hi_i] @ M.T) / (nn[lo_i:hi_i, None] * nn[None, :])
-            ii, jj = np.nonzero(cos >= thr)
-            keep = (ii + lo_i) < jj  # smaller-id neighbor drops the larger
-            hit[jj[keep]] = True
-        return pd.DataFrame({"vec_id": ids[hit]})
-
-    dropped = (
-        assigned.groupBy("cell")
-        .applyInPandas(cell_dropped, schema="vec_id long")
-        .transform(_pin)
-    )
-    out = (
-        assigned.join(
-            dropped.withColumn("_dup", F.lit(True)), "vec_id", "left"
+        out = (
+            assigned.join(
+                dropped.withColumn("_dup", F.lit(True)), "vec_id", "left"
+            )
+            .select(
+                "vec_id",
+                F.col("cell").cast("int").alias("cell"),
+                F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
+            )
+            .transform(_pin)  # verdict rows only — 13 B/vector, no vectors
         )
-        .select(
-            "vec_id",
-            F.col("cell").cast("int").alias("cell"),
-            F.coalesce(~F.col("_dup"), F.lit(True)).alias("keep"),
-        )
-        .transform(_pin)  # verdict rows only — 13 B/vector, no vectors
-    )
-    assigned.unpersist()
+    finally:
+        assigned.unpersist()
     return out
+
 
 def embedding_standardize_checksum(
     df: DataFrame,
@@ -997,20 +771,6 @@ def embedding_standardize_checksum(
     )
 
 
-def _codebook_cells_expr(centroids: list[list[float]]) -> Column:
-    """The literal ``array<struct<c,c2,ci>>`` codebook expression —
-    the single-``F.expr`` shipping trick of :func:`_cell_ranking_expr`
-    factored for reuse (PQ ships one per subspace)."""
-    items = []
-    for j, cent in enumerate(centroids):
-        c2 = sum(x * x for x in cent)
-        arr = ",".join(f"{x!r}D" for x in cent)
-        items.append(
-            f"named_struct('c', array({arr}), 'c2', {float(c2)!r}D, 'ci', {j})"
-        )
-    return F.expr("array(" + ",".join(items) + ")")
-
-
 def pq_codebooks(
     m: int = 4, subdim: int = 16, k: int = 8, seed: int = 0x9900
 ) -> list[list[list[float]]]:
@@ -1018,6 +778,47 @@ def pq_codebooks(
     codebooks are rarely-retrained ARTIFACTS; a production system
     trains them with the q39 quantized-Lloyd trainer per subspace)."""
     return [_hyperplanes(k, subdim, seed=seed + s) for s in range(m)]
+
+
+# PQ column set shared by the two ADC tiers: a staged vector is sliced
+# into m subvectors ``_sv{s}``; corpus rows encode each as ``code_{s}``
+# (its nearest sub-centroid), queries carry per-subspace distance
+# tables ``_dt{s}``, and a pair's ADC distance sums m table lookups.
+
+
+def _pq_slices(vec: str, codebooks: list[list[list[float]]]) -> list[Column]:
+    subdim = len(codebooks[0][0])
+    return [
+        F.slice(F.col(vec), s * subdim + 1, subdim).alias(f"_sv{s}")
+        for s in range(len(codebooks))
+    ]
+
+
+def _pq_codes(codebooks: list[list[list[float]]]) -> list[Column]:
+    return [
+        _cell_ranking_expr(cb, f"_sv{s}")[0]["i"].alias(f"code_{s}")
+        for s, cb in enumerate(codebooks)
+    ]
+
+
+def _pq_dist_tables(codebooks: list[list[list[float]]]) -> list[Column]:
+    def table(s: int, cb: list[list[float]]) -> Column:
+        v = F.col(f"_sv{s}")
+        return F.transform(_codebook_cells_expr(cb), lambda st: _cell_dist(v, st))
+
+    return [table(s, cb).alias(f"_dt{s}") for s, cb in enumerate(codebooks)]
+
+
+def _adc_micro(m: int) -> Column:
+    """Micro-quantized ADC distance of a (code row, table row) pair:
+    `-2·dot+c²` is an a·b+c polynomial that C++ engines FMA-contract
+    and the JVM does not (1-ulp, data-dependent — the PLANS.md
+    quantization rule), so the raw double can't be emitted or ranked
+    on. The m-term sum runs in a fixed order."""
+    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
+    for s in range(1, m):
+        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
+    return F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro")
 
 
 def pq_adc_topk(
@@ -1052,74 +853,23 @@ def pq_adc_topk(
       whole pipeline is value-exact cross-engine with no rounding.
 
     IVF-PQ composition (cell-bucketed candidate generation + ADC
-    rerank) is q79's bucketing joined to this scan; kept separate so
-    each tier stays independently oracle-checkable."""
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    cells = [_codebook_cells_expr(cb) for cb in codebooks]
-
-    def slices(frame: DataFrame, out_id: str) -> DataFrame:
-        staged = frame.select(
-            F.col(id_col).alias(out_id), _as_double(vec_col).alias("_v")
-        )
-        return staged.select(
-            out_id,
-            *[
-                F.slice(F.col("_v"), s * subdim + 1, subdim).alias(f"_sv{s}")
-                for s in range(m)
-            ],
-        )
-
-    # NB: the lambdas must stay single-parameter — a two-parameter
-    # lambda makes Spark's transform() bind (element, index), so a
-    # `_s=s` default-capture trick would receive the index Column
-    def _code_col(s: int) -> Column:
-        def rank_item(st: Column) -> Column:
-            return F.struct(
-                (
-                    F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-                ).alias("d"),
-                st["ci"].alias("i"),
-            )
-
-        return F.array_sort(F.transform(cells[s], rank_item))[0]["i"].alias(
-            f"code_{s}"
-        )
-
-    def _dtab_col(s: int) -> Column:
-        def dist_item(st: Column) -> Column:
-            return F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-
-        return F.transform(cells[s], dist_item).alias(f"_dt{s}")
-
-    enc = slices(corpus, "neighbor_id").select(
-        "neighbor_id", *[_code_col(s) for s in range(m)]
+    rerank) is :func:`ivfpq_topk`; kept separate so each tier stays
+    independently oracle-checkable."""
+    enc = (
+        _stage(corpus, "corpus", id_col, vec_col)
+        .select("neighbor_id", *_pq_slices("cv", codebooks))
+        .select("neighbor_id", *_pq_codes(codebooks))
     )
-    qt = slices(queries, "query_id").select(
-        "query_id", *[_dtab_col(s) for s in range(m)]
+    qt = (
+        _stage(queries, "query", id_col, vec_col)
+        .select("query_id", *_pq_slices("qv", codebooks))
+        .select("query_id", *_pq_dist_tables(codebooks))
     )
-    pairs = enc.crossJoin(F.broadcast(qt)).filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
-    # micro-quantized: `-2·dot+c²` is an a·b+c polynomial that C++
-    # engines FMA-contract and the JVM does not (1-ulp, data-dependent
-    # — the PLANS.md quantization rule), so the raw double can't be
-    # emitted or ranked on
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
+    return _top_k(
+        enc.crossJoin(F.broadcast(qt)),
+        _adc_micro(len(codebooks)),
+        F.asc("adc_micro"),
+        k,
     )
 
 
@@ -1143,80 +893,29 @@ def ivfpq_topk(
     nprobe probes carrying their ADC tables, and the join is one
     hash equi-join on the cell key. ADC distances are micro-quantized
     (the q140 FMA rule) and ranked per query."""
-    m = len(codebooks)
-    subdim = len(codebooks[0][0])
-    cells = [_codebook_cells_expr(cb) for cb in codebooks]
-
-    def _sub_cols(vec: Column) -> list[Column]:
-        return [
-            F.slice(vec, s * subdim + 1, subdim).alias(f"_sv{s}")
-            for s in range(m)
-        ]
-
-    def _code_col(s: int) -> Column:
-        def rank_item(st: Column) -> Column:
-            return F.struct(
-                (
-                    F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-                ).alias("d"),
-                st["ci"].alias("i"),
-            )
-
-        return F.array_sort(F.transform(cells[s], rank_item))[0]["i"].alias(
-            f"code_{s}"
-        )
-
-    def _dtab_col(s: int) -> Column:
-        def dist_item(st: Column) -> Column:
-            return F.lit(-2.0) * dot(F.col(f"_sv{s}"), st["c"]) + st["c2"]
-
-        return F.transform(cells[s], dist_item).alias(f"_dt{s}")
-
     c = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("_v")
-        )
+        _stage(corpus, "corpus", id_col, vec_col)
         .select(
             "neighbor_id",
-            _cell_ranking_expr(coarse_cents, "_v")[0]["i"].alias("cell"),
-            *_sub_cols(F.col("_v")),
+            _cell_ranking_expr(coarse_cents, "cv")[0]["i"].alias("cell"),
+            *_pq_slices("cv", codebooks),
         )
-        .select("neighbor_id", "cell", *[_code_col(s) for s in range(m)])
+        .select("neighbor_id", "cell", *_pq_codes(codebooks))
     )
     q = (
-        queries.select(
-            F.col(id_col).alias("query_id"), _as_double(vec_col).alias("_v")
-        )
+        _stage(queries, "query", id_col, vec_col)
         .select(
             "query_id",
-            F.explode(
-                F.transform(
-                    F.slice(_cell_ranking_expr(coarse_cents, "_v"), 1, nprobe),
-                    lambda s: s["i"],
-                )
-            ).alias("cell"),
-            *_sub_cols(F.col("_v")),
+            F.explode(_nearest_cells(coarse_cents, "qv", nprobe)).alias("cell"),
+            *_pq_slices("qv", codebooks),
         )
-        .select("query_id", "cell", *[_dtab_col(s) for s in range(m)])
+        .select("query_id", "cell", *_pq_dist_tables(codebooks))
     )
-    pairs = c.join(F.broadcast(q), "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    adc = F.element_at(F.col("_dt0"), F.col("code_0") + 1)
-    for s in range(1, m):
-        adc = adc + F.element_at(F.col(f"_dt{s}"), F.col(f"code_{s}") + 1)
-    scored = pairs.select(
-        "query_id",
-        "neighbor_id",
-        F.round(adc * F.lit(1e6)).cast("long").alias("adc_micro"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_micro"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "adc_micro", "rank")
+    return _top_k(
+        c.join(F.broadcast(q), "cell"),
+        _adc_micro(len(codebooks)),
+        F.asc("adc_micro"),
+        k,
     )
 
 

@@ -222,18 +222,19 @@ def top_k_per_group(
     partition_by: Sequence[str],
     order_by: Sequence[Column],
     k: int,
-    rank_col: str = "_rn",
-    keep_rank: str | None = None,
+    rank_col: str = "rank",
 ) -> DataFrame:
-    """Generalized top-k per group (used by similarity search §2's
-    cosine top-k). Optionally keeps the rank as ``keep_rank``."""
+    """Top-k per group: ``df``'s rows whose ``row_number`` within
+    ``partition_by`` under ``order_by`` is at most ``k``, with that
+    number kept as the bigint ``rank_col`` — the per-query rank of
+    every similarity top-k operator. Callers make ``order_by`` a total
+    order within each group, so ranks are deterministic. Spark plans
+    the rank filter as a per-partition group limit before the
+    shuffle."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    out = df.withColumn(rank_col, F.row_number().over(w)).filter(
+    return df.withColumn(rank_col, F.row_number().over(w).cast("long")).filter(
         F.col(rank_col) <= k
     )
-    if keep_rank:
-        return out.withColumnRenamed(rank_col, keep_rank)
-    return out.drop(rank_col)
 
 
 def scalable_prefix_sums(

@@ -236,10 +236,7 @@ def q27(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k (exact ANN baseline): query set
     broadcast, corpus streamed — the corpus side never shuffles."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 20), k=5, metric="cosine"
-    )
-    return out.withColumn("rank", F.col("rank").cast("long"))
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 20), k=5)
 
 
 @register(
@@ -284,14 +281,15 @@ def q30(spark: SparkSession, sf_dir: str) -> DataFrame:
         + dot(F.col("cv"), F.col("cv"))
         - F.lit(2) * dot(F.col("qv"), F.col("cv"))
     )
-    from pyspark.sql import Window
+    from ..operators.windows import top_k_per_group
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", score.alias("score"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
+    return top_k_per_group(
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+            "query_id", "neighbor_id", score.alias("score")
+        ),
+        ["query_id"],
+        [F.desc("score"), F.asc("neighbor_id")],
+        k=5,
     )
 
 
@@ -527,8 +525,7 @@ def q32(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplanes are deterministic driver literals, so DuckDB recomputes
     the identical buckets and scores (see _lsh_topk_oracle)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = lsh_topk(emb, emb.filter(F.col("vec_id") < 20), k=5, bits=6)
-    return out.withColumn("rank", F.col("rank").cast("long"))
+    return lsh_topk(emb, emb.filter(F.col("vec_id") < 20), k=5, bits=6)
 
 
 @register(
@@ -2366,10 +2363,7 @@ def q95(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same literal hyperplanes — the whole recall lever is
     value-exact, not just unit-asserted."""
     emb = load_table(spark, sf_dir, "embeddings")
-    out = lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 20), k=5, bits=6, probes=2
-    )
-    return out.withColumn("rank", F.col("rank").cast("long"))
+    return lsh_topk(emb, emb.filter(F.col("vec_id") < 20), k=5, bits=6, probes=2)
 
 
 # ---------------------------------------------------------------------------
@@ -3134,12 +3128,8 @@ def q108(spark: SparkSession, sf_dir: str) -> DataFrame:
         fresh.select("query_id", "neighbor_id", "score")
     )
     return top_k_per_group(
-        merged,
-        ["query_id"],
-        [F.desc("score"), F.asc("neighbor_id")],
-        k=5,
-        keep_rank="rank",
-    ).withColumn("rank", F.col("rank").cast("long"))
+        merged, ["query_id"], [F.desc("score"), F.asc("neighbor_id")], k=5
+    )
 
 
 # ---------------------------------------------------------------------------

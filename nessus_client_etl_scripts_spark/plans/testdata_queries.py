@@ -31,7 +31,7 @@ from ..catalog import load_table, load_tables
 from ..operators.aggregates import exists_flag, max_date_watermark, pivot_sum
 from ..operators.joins import chain_join, dim_join, semi_join_latest
 from ..operators.predicates import optional_eq_filter, valid_partition_key
-from ..operators.windows import latest_per_group, nth_per_group, top_k_per_group
+from ..operators.windows import latest_per_group, nth_per_group
 
 SparkQuery = Callable[[SparkSession, str], DataFrame]
 

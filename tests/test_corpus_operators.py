@@ -167,38 +167,45 @@ def test_lang_guess_markers(spark):
     assert got == {1: "en", 2: "fr", 3: "de", 4: "unknown"}
 
 
-def test_ivf_topk_full_probe_equals_brute_force(spark):
-    """nprobe = n_centroids probes every bucket -> IVF must return
-    exactly the brute-force answer (the recall anchor)."""
+def test_ivf_exact_topk_full_probe_equals_brute_force(spark):
+    """nprobe = n_centroids probes every cell -> IVF must return
+    exactly the brute-force answer (the recall anchor), with the
+    trainer/serve pair q39 runs."""
     from nessus_client_etl_scripts_spark.catalog import load_table
-    from nessus_client_etl_scripts_spark.operators.similarity import ivf_topk
+    from nessus_client_etl_scripts_spark.operators.similarity import (
+        ivf_exact_topk,
+        kmeans_exact_quantized,
+    )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
+    cents = kmeans_exact_quantized(emb, n_centroids=4, iters=2)
     brute = brute_force_topk(emb, queries, k=3)
-    ivf = ivf_topk(emb, queries, k=3, n_centroids=4, nprobe=4, iters=2)
+    ivf = ivf_exact_topk(emb, queries, cents, k=3, nprobe=4)
     b = {(r.query_id, r.rank): r.neighbor_id for r in brute.collect()}
     v = {(r.query_id, r.rank): r.neighbor_id for r in ivf.collect()}
     assert b == v
 
 
-def test_ivf_topk_pruned_probe_recall(spark):
-    """nprobe=1 of 4 buckets: candidates shrink but results stay a
+def test_ivf_exact_topk_pruned_probe_recall(spark):
+    """nprobe=1 of 4 cells: candidates shrink but results stay a
     subset of valid neighbors with positive recall."""
     from nessus_client_etl_scripts_spark.catalog import load_table
     from nessus_client_etl_scripts_spark.operators.similarity import (
         brute_force_topk as bf,
-        ivf_topk,
+        ivf_exact_topk,
+        kmeans_exact_quantized,
     )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
+    cents = kmeans_exact_quantized(emb, n_centroids=4, iters=2)
     brute = {(r.query_id, r.neighbor_id) for r in bf(emb, queries, k=5).collect()}
-    ivf = ivf_topk(emb, queries, k=5, n_centroids=4, nprobe=1, iters=2)
+    ivf = ivf_exact_topk(emb, queries, cents, k=5, nprobe=1)
     got = [(r.query_id, r.neighbor_id) for r in ivf.collect()]
     assert len(got) > 0
     recall = len(set(got) & brute) / len(brute)
-    assert recall > 0.3  # 1-of-4 buckets must still find a fair share
+    assert recall > 0.3  # 1-of-4 cells must still find a fair share
 
 
 def test_quantile_rank_known_values(spark):
@@ -254,7 +261,7 @@ def test_codebook_ivf_exact_when_single_cell(spark):
     }
     brute = {
         (r["query_id"], r["rank"]): r["neighbor_id"]
-        for r in brute_force_topk(emb, q, k=3, metric="cosine").collect()
+        for r in brute_force_topk(emb, q, k=3).collect()
     }
     assert ivf == brute
 

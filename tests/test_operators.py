@@ -72,7 +72,8 @@ def test_top_k_per_group_keeps_rank(spark):
     df = spark.createDataFrame(
         [(1, 5), (1, 9), (1, 7), (2, 1)], "k int, v int"
     )
-    out = top_k_per_group(df, ["k"], [F.desc("v")], k=2, keep_rank="rank")
+    out = top_k_per_group(df, ["k"], [F.desc("v")], k=2)
+    assert dict(out.dtypes)["rank"] == "bigint"
     got = sorted((r.k, r.rank, r.v) for r in out.collect())
     assert got == [(1, 1, 9), (1, 2, 7), (2, 1, 1)]
 
